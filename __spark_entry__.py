@@ -21,7 +21,7 @@ oracle_sql() — DuckDB-equivalent SQL per query (bit-exact by design;
                oracles: three non-relational ones (viewshed ray walk,
                IDW float-sum order, sieve cascade — proofs in their
                docstrings) pin golden VALUES literals FROZEN as source
-               constants (gdal_spark/golden_pins_sf001.py — the
+               constants (gdal_spark/golden_pins.py — the
                reference's own autotest checksum-pinning discipline),
                each additionally backed by an exact
                distributed==single-node pytest oracle.

@@ -114,7 +114,8 @@ def run_stage(df: DataFrame, path: str, key_cols: list[str],
               n_buckets: int = DEFAULT_BUCKETS) -> dict:
     """Write `df` to `path` bucketed by key_cols, resuming from any
     prior partial run. Returns {'written': k, 'skipped': m} bucket
-    counts. Idempotent: running twice writes nothing the second time.
+    counts. Idempotent: running twice writes nothing the second time,
+    and once every bucket is committed `df` is not computed at all.
     """
     spark = df.sparkSession
     bucketed = _bucket(df, key_cols, n_buckets)
@@ -127,6 +128,10 @@ def run_stage(df: DataFrame, path: str, key_cols: list[str],
         # crash-window repair: drop data dirs that never got a manifest
         # row, so re-processing them cannot append duplicates
         _purge_orphan_buckets(spark, path, committed)
+        if committed >= set(range(n_buckets)):
+            # every bucket a row can hash to is committed: the anti-join
+            # below would drop every row
+            return {"written": 0, "skipped": skipped}
         done = prior.select("bucket")
         bucketed = bucketed.join(F.broadcast(done), "bucket", "left_anti")
     else:

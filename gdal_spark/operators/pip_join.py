@@ -136,161 +136,12 @@ def _test_points(px: np.ndarray, py: np.ndarray, polys_and_bbox) -> np.ndarray:
     return mask
 
 
-def _convex_ccw_ring(ring: np.ndarray) -> np.ndarray | None:
-    """ring (closed or open) -> CCW vertex array if strictly convex,
-    else None."""
-    r = np.asarray(ring, np.float64)
-    if len(r) >= 2 and (r[0] == r[-1]).all():
-        r = r[:-1]
-    if len(r) < 3:
-        return None
-    nxt = np.roll(np.arange(len(r)), -1)
-    nx2 = np.roll(np.arange(len(r)), -2)
-    cross = ((r[nxt, 0] - r[:, 0]) * (r[nx2, 1] - r[nxt, 1])
-             - (r[nxt, 1] - r[:, 1]) * (r[nx2, 0] - r[nxt, 0]))
-    if (cross > 0).all():
-        return r
-    if (cross < 0).all():
-        return r[::-1]
-    return None
-
-
-def _codegen_polys(poly_rows):
-    """-> [(pid, ccw_ring)] if EVERY polygon is a single convex ring
-    (no holes, no multipolygons), else None."""
-    out = []
-    for pid, blob in poly_rows:
-        polys = wkb.polygon_rings(bytes(blob))
-        if len(polys) != 1 or len(polys[0]) != 1:
-            return None
-        ring = _convex_ccw_ring(polys[0][0])
-        if ring is None:
-            return None
-        out.append((pid, ring))
-    return out
-
-
-def pip_join_codegen(points: DataFrame, convex_polys, lon_col: str,
-                     lat_col: str, how: str) -> DataFrame:
-    """WHOLE-JVM point-in-polygon join for convex polygon sets: each
-    polygon compiles to an AND-chain of half-plane predicates and the
-    match list is a filtered literal array — pure Catalyst codegen, no
-    Python exchange at all.
-
-    This generalizes the reference's own rectangle shortcut in the
-    spatial-filter ladder (ogrlayer.cpp:3930-3993 skips GEOS when the
-    filter is a rectangle) from rectangles to arbitrary convex rings.
-    Boundary semantics: >= 0 half-plane (boundary points match), vs
-    the even-odd kernel's half-open rule — identical away from edges;
-    the general path remains authoritative for non-convex geometry.
-    """
-    lon, lat = F.col(lon_col), F.col(lat_col)
-
-    def inside(ring) -> F.Column:
-        pred = None
-        for i in range(len(ring)):
-            x1, y1 = ring[i]
-            x2, y2 = ring[(i + 1) % len(ring)]
-            p = ((F.lit(float(x2 - x1)) * (lat - F.lit(float(y1)))
-                  - F.lit(float(y2 - y1)) * (lon - F.lit(float(x1))))
-                 >= F.lit(0.0))
-            pred = p if pred is None else (pred & p)
-        return pred
-
-    matches = F.array(*[
-        F.when(inside(ring), F.lit(int(pid)).cast("int"))
-        for pid, ring in convex_polys])
-    hits = F.filter(matches, lambda x: x.isNotNull())
-    if how == "semi":
-        return points.filter(F.size(hits) > 0)
-    if how == "anti":
-        return points.filter(F.size(hits) == 0)
-    if how == "inner":
-        return (points.withColumn("poly_id", F.explode(hits)))
-    # left: explode_outer keeps no-match rows with NULL
-    return points.withColumn("poly_id", F.explode_outer(hits))
-
-
-def _hof_polys_literal(poly_rows) -> F.Column:
-    """Polygon set -> ONE literal array<struct<pid, bbox, edges>> for
-    the higher-order-function PIP path."""
-    items = []
-    for pid, blob in poly_rows:
-        polys_rings, (minx, miny, maxx, maxy) = _prepare_one(blob)
-        edges = []
-        for rings in polys_rings:
-            for ring in rings:
-                r = ring
-                if (r[0] != r[-1]).any():
-                    r = np.vstack([r, r[:1]])
-                for i in range(len(r) - 1):
-                    edges.append(F.struct(
-                        F.lit(float(r[i, 0])).alias("x1"),
-                        F.lit(float(r[i, 1])).alias("y1"),
-                        F.lit(float(r[i + 1, 0])).alias("x2"),
-                        F.lit(float(r[i + 1, 1])).alias("y2")))
-        items.append(F.struct(
-            F.lit(int(pid)).alias("pid"),
-            F.lit(float(minx)).alias("minx"), F.lit(float(miny)).alias("miny"),
-            F.lit(float(maxx)).alias("maxx"), F.lit(float(maxy)).alias("maxy"),
-            F.array(*edges).alias("edges")))
-    return F.array(*items)
-
-
-def pip_join_jvm(points: DataFrame, polys: DataFrame,
-                 lon_col: str = "lon", lat_col: str = "lat",
-                 how: str = "inner") -> DataFrame:
-    """Whole-JVM PIP join via higher-order functions — the branch-free
-    alternative to both the Arrow path and the convex-only when-chain
-    codegen: the polygon set compiles to ONE literal array and each row
-    evaluates
-
-        filter(polys, p -> bbox_hit(p) AND
-               odd(aggregate(p.edges, crossings(lon, lat))))
-
-    entirely inside the JVM (no Python exchange, no expression-tree
-    blowup with polygon count, general even-odd semantics including
-    holes and multipolygons — every ring's edges count crossings
-    together). Crossing math mirrors geom.points_in_ring exactly, so
-    results match the Arrow path bit-for-bit. Intended for dim-sized
-    polygon sets like the broadcast path; see BASELINE.md for the A/B
-    measurement against the Arrow path on this host."""
-    poly_rows = [(int(r["poly_id"]), bytes(r["geom"]))
-                 for r in polys.select("poly_id", "geom").collect()]
-    arr = _hof_polys_literal(poly_rows)
-    lon, lat = F.col(lon_col), F.col(lat_col)
-
-    def inside(p):
-        cross = F.aggregate(
-            p["edges"], F.lit(0),
-            lambda acc, e: acc + F.when(
-                ((e["y1"] > lat) != (e["y2"] > lat))
-                & (lon < e["x1"] + (lat - e["y1"]) / (e["y2"] - e["y1"])
-                   * (e["x2"] - e["x1"])),
-                F.lit(1)).otherwise(F.lit(0)))
-        bbox = ((lon >= p["minx"]) & (lon <= p["maxx"])
-                & (lat >= p["miny"]) & (lat <= p["maxy"]))
-        return bbox & (F.pmod(cross, F.lit(2)) == 1)
-
-    hits = F.transform(F.filter(arr, inside), lambda p: p["pid"])
-    if how == "semi":
-        return points.filter(F.size(hits) > 0)
-    if how == "anti":
-        return points.filter(F.size(hits) == 0)
-    if how == "inner":
-        return points.withColumn("poly_id", F.explode(hits))
-    return points.withColumn("poly_id", F.explode_outer(hits))
-
-
 def pip_join_broadcast(
     points: DataFrame,
     polys: DataFrame,
     lon_col: str = "lon",
     lat_col: str = "lat",
     how: str = "inner",
-    jvm_bbox_prefilter: bool = True,
-    use_index: bool | None = None,
-    allow_codegen: bool = False,
 ) -> DataFrame:
     """Broadcast PIP join.
 
@@ -303,73 +154,53 @@ def pip_join_broadcast(
     A point matching k polygons emits k rows (inner/left), matching the
     reference's pairwise layer algebra.
 
-    jvm_bbox_prefilter moves stage 1 of the reference's accept ladder
-    (envelope reject, ogrlayer.cpp:3994) INTO Catalyst codegen: an OR
-    of per-polygon bbox range predicates drops every point that can
-    match nothing BEFORE the Arrow exchange, so the Python stage only
-    sees candidate rows (~the polygons' combined bbox coverage). The
-    OR-chain is sized for dim-scale polygon sets (10^2-10^3); beyond
-    that use pip_join_shuffle, whose cell join plays the same role.
+    Up to 256 polygons, stage 1 of the reference's accept ladder
+    (envelope reject, ogrlayer.cpp:3994) runs INSIDE Catalyst codegen:
+    an OR of per-polygon bbox range predicates drops every point that
+    can match nothing BEFORE the Arrow exchange, so the Python stage
+    only sees candidate rows (~the polygons' combined bbox coverage).
+    Past that the OR-chain stops paying (expression size) and the
+    in-task grid index carries the bbox stage instead; beyond
+    dim-scale polygon sets use pip_join_shuffle, whose cell join plays
+    the same role.
     """
     poly_rows = [(int(r["poly_id"]), bytes(r["geom"]))
                  for r in polys.select("poly_id", "geom").collect()]
+    bpolys = points.sparkSession.sparkContext.broadcast(poly_rows)
+    if not poly_rows or len(poly_rows) > 256:
+        return _exact_stage(points, poly_rows, bpolys, lon_col, lat_col, how)
 
-    # NOTE: prefilter split runs FIRST (below); the recursive call on
-    # the candidate subset then takes the codegen or UDF exact stage.
-    # Running the half-plane when-array over ALL rows instead of bbox
-    # candidates measured 13x slower — the wide conditional expression
-    # is only cheap on the small candidate fraction.
-    sc = points.sparkSession.sparkContext
-    bpolys = sc.broadcast(poly_rows)
+    lon, lat = F.col(lon_col), F.col(lat_col)
+    bbox_pred = None
+    for _, blob in poly_rows:
+        minx, miny, maxx, maxy = _prepare_one(blob)[1]
+        p = lon.between(float(minx), float(maxx)) & \
+            lat.between(float(miny), float(maxy))
+        bbox_pred = p if bbox_pred is None else (bbox_pred | p)
+    # NULL lon/lat satisfies NEITHER bbox_pred nor ~bbox_pred (both
+    # evaluate to NULL) — route such rows into `rest` explicitly so
+    # left/anti keep them (NaN in the exact stage never matches)
+    null_coord = lon.isNull() | lat.isNull()
+    cand = points.filter(bbox_pred & ~null_coord)
+    core = _exact_stage(cand, poly_rows, bpolys, lon_col, lat_col, how)
+    if how == "inner" or how == "semi":
+        return core
+    rest = points.filter(~bbox_pred | null_coord)
+    if how == "anti":
+        return core.unionByName(rest)
+    # left: non-candidates pass through with NULL poly_id
+    return core.unionByName(
+        rest.withColumn("poly_id", F.lit(None).cast("int")))
 
-    # the codegen OR-chain stops paying past a few hundred polygons
-    # (expression size); beyond that the in-task grid index carries the
-    # bbox stage instead
-    if jvm_bbox_prefilter and len(poly_rows) <= 256:
-        prepared_bbox = [_prepare_one(blob)[1] for _, blob in poly_rows]
-        lon, lat = F.col(lon_col), F.col(lat_col)
-        bbox_pred = None
-        for (minx, miny, maxx, maxy) in prepared_bbox:
-            p = lon.between(float(minx), float(maxx)) & \
-                lat.between(float(miny), float(maxy))
-            bbox_pred = p if bbox_pred is None else (bbox_pred | p)
-        if bbox_pred is not None:
-            # NULL lon/lat satisfies NEITHER bbox_pred nor ~bbox_pred
-            # (both evaluate to NULL) — route such rows into `rest`
-            # explicitly so left/anti keep them, matching the
-            # prefilter-off path (NaN in the UDF never matches)
-            null_coord = lon.isNull() | lat.isNull()
-            cand = points.filter(bbox_pred & ~null_coord)
-            rest = points.filter(~bbox_pred | null_coord)
-            core = pip_join_broadcast(cand, polys, lon_col, lat_col, how,
-                                      jvm_bbox_prefilter=False,
-                                      use_index=use_index,
-                                      allow_codegen=allow_codegen)
-            if how == "inner" or how == "semi":
-                return core
-            if how == "anti":
-                return core.unionByName(rest)
-            # left: non-candidates pass through with NULL poly_id
-            return core.unionByName(
-                rest.withColumn("poly_id", F.lit(None).cast("int")))
 
-    # OPT-IN: all-convex polygon sets can compile to pure-codegen
-    # half-plane math (the join never leaves the JVM — generalizes the
-    # reference's rectangle shortcut). Off by default: the wide
-    # when-array measured SLOWER than the Arrow path on this JVM
-    # (conditional-expression codegen limits); the vectorized UDF
-    # ladder is the production default.
-    if allow_codegen and len(poly_rows) <= 256:
-        cg = _codegen_polys(poly_rows)
-        if cg is not None:
-            return pip_join_codegen(points, cg, lon_col, lat_col, how)
-
+def _exact_stage(points: DataFrame, poly_rows, bpolys, lon_col: str,
+                 lat_col: str, how: str) -> DataFrame:
+    """Stage 2 of the ladder: the vectorized exact test per Arrow batch
+    against the broadcast polygons (`bpolys` holds `poly_rows`)."""
     out_schema = T.StructType(points.schema.fields + [T.StructField("poly_id", T.IntegerType(), True)])
     emit_poly = how in ("inner", "left")
     schema = out_schema if emit_poly else points.schema
-
-    want_index = (use_index if use_index is not None
-                  else len(poly_rows) > INDEX_THRESHOLD)
+    want_index = len(poly_rows) > INDEX_THRESHOLD
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         prepared = _decode_polys(bpolys.value)
@@ -430,13 +261,7 @@ def explode_polys_to_cells(polys: DataFrame, res: int = cells.DEFAULT_RES) -> Da
         for pdf in batches:
             rows_c, rows_p, rows_g = [], [], []
             for _, row in pdf.iterrows():
-                polys_rings = wkb.polygon_rings(bytes(row["geom"]))
-                minx, miny, maxx, maxy = geom.bbox_of_ring(polys_rings[0][0])
-                for rings in polys_rings[1:]:
-                    bx = geom.bbox_of_ring(rings[0])
-                    minx, miny = min(minx, bx[0]), min(miny, bx[1])
-                    maxx, maxy = max(maxx, bx[2]), max(maxy, bx[3])
-                cc = cells.covering_cells(minx, miny, maxx, maxy, res)
+                cc = cells.covering_cells(*_prepare_one(row["geom"])[1], res)
                 rows_c.extend(int(c) for c in cc)
                 rows_p.extend([int(row["poly_id"])] * len(cc))
                 rows_g.extend([row["geom"]] * len(cc))

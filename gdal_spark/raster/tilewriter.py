@@ -41,21 +41,28 @@ def write_pyramid(points: DataFrame, out_dir: str, base_zoom: int,
 
     Each zoom level is its own checkpoint stage keyed by
     (tile_y, tile_x): re-running after a partial failure rewrites
-    ONLY the missing buckets of the missing levels."""
+    ONLY the missing buckets of the missing levels.
+
+    Each level stays cached only until the level built from it has been
+    through run_stage, so no level is computed twice and none outlives
+    the call."""
     stats: dict[int, dict] = {}
-    base = D.density_tiles(points, base_zoom, tile).persist()
+    held = [D.density_tiles(points, base_zoom, tile).persist()]
     try:
-        cur = base
         for z in range(base_zoom, min_zoom - 1, -1):
             if z != base_zoom:
-                cur = P.overview_level(cur, z + 1, kernel, tile).persist()
-            with_zoom = cur.withColumn("zoom", F.lit(z))
+                held.append(P.overview_level(held[-1], z + 1, kernel,
+                                             tile).persist())
             stats[z] = CP.run_stage(
-                with_zoom, os.path.join(out_dir, f"z{z}"),
+                held[-1].withColumn("zoom", F.lit(z)),
+                os.path.join(out_dir, f"z{z}"),
                 ["tile_y", "tile_x"], n_buckets=n_buckets)
+            while len(held) > 1:
+                held.pop(0).unpersist()
         return stats
     finally:
-        base.unpersist()
+        for level in held:
+            level.unpersist()
 
 
 _PNG_OUT = T.StructType([

@@ -82,6 +82,7 @@ def gdalwarp(spark: SparkSession, src_path: str, dst_path: str,
 
 
 #: cutlines are feature-scale metadata; refuse to collect more
+_CUTLINE_MAX_FEATURES = 10_000
 _CUTLINE_MAX_VERTICES = 100_000
 
 
@@ -94,7 +95,11 @@ def _crop_spec_to_cutline(dst: G.GridSpec, cut_df, src_crs: str) -> G.GridSpec:
     from ..geo import crs as _crs
     from ..geo import wkb as _wkb
 
-    rows = cut_df.limit(10_000).collect()
+    rows = cut_df.limit(_CUTLINE_MAX_FEATURES + 1).collect()
+    if len(rows) > _CUTLINE_MAX_FEATURES:
+        raise ValueError(
+            f"cutline exceeds {_CUTLINE_MAX_FEATURES} features; "
+            "dissolve it or pass dst_spec=")
     xs, ys, total = [], [], 0
     for r in rows:
         for poly in _wkb.polygon_rings(bytes(r["geom"])):

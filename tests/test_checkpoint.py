@@ -33,6 +33,12 @@ def test_stage_rerun_is_noop(spark, tmp_path):
     out2 = CP.run_stage(_df(spark), path, ["cell_id"], n_buckets=8)
     assert out2 == {"written": 0, "skipped": 8}
     assert spark.read.parquet(path).count() == 1000  # nothing duplicated
+    # every bucket committed: the input is not even evaluated (the UDF
+    # is nondeterministic so Catalyst cannot push the anti-join below it)
+    fail = F.udf(lambda v: v // 0, "long").asNondeterministic()
+    boom = _df(spark).withColumn("v", fail("v"))
+    out3 = CP.run_stage(boom, path, ["cell_id"], n_buckets=8)
+    assert out3 == {"written": 0, "skipped": 8}
 
 
 def test_stage_resume_after_partial(spark, tmp_path):

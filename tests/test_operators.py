@@ -2,6 +2,8 @@
 a numpy oracle; dedup/similarity behave per spec; the byte-identical
 text invariant holds end-to-end."""
 
+import re
+
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -10,33 +12,82 @@ from gdal_spark.operators import dedup, pip_join, similarity
 from gdal_spark.sources import admin, pages
 
 
+def _oracle_hits(pdf, rings) -> set[tuple[int, int]]:
+    """(doc_id, poly_id) pairs from the numpy even-odd kernel, one
+    ring per polygon: [(poly_id, closed ring)]."""
+    lon, lat = pdf["lon"].to_numpy(), pdf["lat"].to_numpy()
+    docs = pdf["doc_id"].to_numpy()
+    return {(int(d), pid) for pid, ring in rings
+            for d in docs[geom.points_in_ring(lon, lat, ring)]}
+
+
+def _assert_modes_match_oracle(pts, polys, rings) -> None:
+    """All four join modes against the numpy oracle: inner/left as
+    (doc_id, poly_id) sets, semi/anti as doc_id sets."""
+    pdf = pts.toPandas()
+    pairs = _oracle_hits(pdf, rings)
+    assert pairs, "fixture should produce matches"
+    hit = {d for d, _ in pairs}
+    miss = {int(d) for d in pdf["doc_id"]} - hit
+    want = {"inner": pairs, "left": pairs | {(d, None) for d in miss},
+            "semi": hit, "anti": miss}
+    for how, expected in want.items():
+        rows = pip_join.pip_join_broadcast(pts, polys, how=how).collect()
+        if how in ("inner", "left"):
+            got = {(r["doc_id"], r["poly_id"]) for r in rows}
+        else:
+            got = {r["doc_id"] for r in rows}
+            assert len(rows) == len(got), f"mode {how}: a point emitted twice"
+        assert got == expected, f"mode {how}"
+
+
 def test_pip_broadcast_matches_numpy_oracle(spark, sf_dir):
     pts = pages.page_points(spark, sf_dir).select("doc_id", "lon", "lat")
-    polys = admin.admin_df(spark)
-    got = {(r["doc_id"], r["poly_id"])
-           for r in pip_join.pip_join_broadcast(pts, polys).collect()}
-    pdf = pts.toPandas()
-    want = set()
-    for pid, _, ring in admin.admin_rings():
-        m = geom.points_in_ring(pdf["lon"].to_numpy(), pdf["lat"].to_numpy(), ring)
-        want |= {(int(d), pid) for d in pdf["doc_id"].to_numpy()[m]}
-    assert got == want
+    rings = [(pid, ring) for pid, _, ring in admin.admin_rings()]
+    _assert_modes_match_oracle(pts, admin.admin_df(spark), rings)
 
 
-def test_pip_jvm_hof_equals_broadcast(spark, sf_dir):
-    """The whole-JVM higher-order-function path (aggregate over a
-    packed edge-array literal) must reproduce the Arrow path exactly,
-    for every join mode — including concave/irregular fixture polygons
-    (no convexity requirement, unlike the when-chain codegen path)."""
+def _plan_ops(df) -> list[str]:
+    """Operator names of df's executed (final adaptive) plan, top-down."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return [m.group() for ln in plan.toString().splitlines()
+            if (m := re.match(r"[A-Za-z]\w*", ln.lstrip(" :+-|*()0123456789")))]
+
+
+def test_pip_broadcast_plan_shape(spark, sf_dir, monkeypatch):
+    """The plan plan_audit check 3 and the benchmark's pip_join.* layer
+    metrics read: the codegen bbox Filter feeds ONE MapInPandas; left
+    and anti add one Union for the non-candidate rows. The polygons are
+    collected and broadcast once per call."""
+    from pyspark import SparkContext
+
     pts = pages.page_points(spark, sf_dir).select("doc_id", "lon", "lat")
     polys = admin.admin_df(spark)
-    for how in ("inner", "semi", "anti", "left"):
-        a = pip_join.pip_join_broadcast(pts, polys, how=how)
-        j = pip_join.pip_join_jvm(pts, polys, how=how)
-        cols = a.columns
-        ra = {tuple(r) for r in a.select(*cols).collect()}
-        rj = {tuple(r) for r in j.select(*cols).collect()}
-        assert ra == rj, f"mode {how}"
+    calls = {"collect": 0, "broadcast": 0}
+
+    def counting(name, fn):
+        def wrapped(*a, **k):
+            calls[name] += 1
+            return fn(*a, **k)
+        return wrapped
+
+    frame = type(polys)
+    monkeypatch.setattr(frame, "collect", counting("collect", frame.collect))
+    monkeypatch.setattr(SparkContext, "broadcast",
+                        counting("broadcast", SparkContext.broadcast))
+    joins = {how: pip_join.pip_join_broadcast(pts, polys, how=how)
+             for how in ("inner", "semi", "left", "anti")}
+    assert calls == {"collect": 4, "broadcast": 4}
+    monkeypatch.undo()
+
+    for how, df in joins.items():
+        ops = _plan_ops(df)
+        assert ops.count("MapInPandas") == 1, (how, ops)
+        assert "Filter" in ops, (how, ops)
+        assert ops.count("Union") == (how in ("left", "anti")), (how, ops)
 
 
 def test_pip_shuffle_equals_broadcast(spark, sf_dir):
@@ -85,38 +136,29 @@ def test_salting_balances_hot_cells(spark, sf_dir):
 
 
 def test_pip_grid_index_matches_naive(spark, sf_dir):
-    """Above INDEX_THRESHOLD polygons, the broadcast path switches to
-    the bucket-grid bbox index — results must be identical to the
-    per-polygon loop."""
-    import numpy as np
+    """Above INDEX_THRESHOLD polygons the broadcast path probes the
+    bucket-grid bbox index instead of looping every polygon; past 256
+    it also skips the codegen bbox prefilter. Both must still match the
+    naive numpy oracle in every join mode."""
     from pyspark.sql import types as T
 
     from gdal_spark.geo import wkb as W
 
-    rows = []
-    for i in range(300):  # > INDEX_THRESHOLD => indexed path
+    rings, rows = [], []
+    for i in range(300):  # > 256 > INDEX_THRESHOLD
         cx = ((i * 47) % 340) - 170.0
         cy = ((i * 31) % 140) - 70.0
         r = 2.0 + (i % 7)
         ang = np.linspace(0, 2 * np.pi, 6, endpoint=False) + i * 0.1
         ring = np.column_stack([cx + r * np.cos(ang), cy + 0.8 * r * np.sin(ang)])
-        rows.append((i, bytearray(W.polygon([np.vstack([ring, ring[:1]])]))))
+        ring = np.vstack([ring, ring[:1]])
+        rings.append((i, ring))
+        rows.append((i, bytearray(W.polygon([ring]))))
     polys = spark.createDataFrame(rows, T.StructType([
         T.StructField("poly_id", T.IntegerType()),
         T.StructField("geom", T.BinaryType())]))
     pts = pages.page_points(spark, sf_dir).select("doc_id", "lon", "lat")
-
-    indexed = {(r["doc_id"], r["poly_id"])
-               for r in pip_join.pip_join_broadcast(
-                   pts, polys, use_index=True, allow_codegen=False).collect()}
-    naive = {(r["doc_id"], r["poly_id"])
-             for r in pip_join.pip_join_broadcast(
-                 pts, polys, use_index=False, allow_codegen=False).collect()}
-    # these hexagons are convex, so the auto path takes codegen — all
-    # three strategies must agree
-    codegen = {(r["doc_id"], r["poly_id"])
-               for r in pip_join.pip_join_broadcast(pts, polys).collect()}
-    assert indexed == naive == codegen and len(indexed) > 0
+    _assert_modes_match_oracle(pts, polys, rings)
 
 
 def test_pip_left_semi_anti(spark, sf_dir):

@@ -52,3 +52,17 @@ def test_pyramid_roundtrip_matches_density(spark, sf_dir, tmp_path):
     got = tiles_to_canvas(TW.read_level(spark, out, 2).drop("zoom"), spec)
     want = tiles_to_canvas(D.density_tiles(pts, 2, 32), spec)
     np.testing.assert_array_equal(got, want)
+
+
+def test_write_pyramid_releases_cached_levels(spark, sf_dir, tmp_path):
+    """write_pyramid caches each level only while the next one is
+    built: Spark's cache manager holds as many entries after the call
+    as before it, for a fresh write and for a resume alike."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    pts = pages.page_points(spark, sf_dir)
+    before = cache.numCachedEntries()
+    out = str(tmp_path / "pyr4")
+    TW.write_pyramid(pts, out, base_zoom=3, min_zoom=1, tile=32)
+    assert cache.numCachedEntries() == before
+    TW.write_pyramid(pts, out, base_zoom=3, min_zoom=1, tile=32)
+    assert cache.numCachedEntries() == before

@@ -186,3 +186,22 @@ def test_gdalwarp_cutline_and_crop(spark, tmp_path):
     outside[max(y0, 0):y1, max(x0, 0):x1] = 0.0
     assert (outside == 0.0).all()
     assert (full[max(y0, 0):y1, max(x0, 0):x1] > 0).any()
+
+
+def test_gdalwarp_crop_refuses_oversized_cutline(spark, tmp_path):
+    """-crop_to_cutline collects the cutline to the driver: one feature
+    past the 10,000-feature fence raises instead of cropping to the
+    envelope of a silently truncated cutline."""
+    from gdal_spark.geo import wkb
+
+    src = str(tmp_path / "src.tif")
+    _write_src(spark, src)
+    cut = []
+    for i in range(10_001):  # tiny triangles: far under the vertex fence
+        x, y = 10.5 + (i % 100) * 0.05, 48.5 + (i // 100) * 0.03
+        cut.append(wkb.polygon([np.array(
+            [[x, y], [x + 1e-3, y], [x, y + 1e-3], [x, y]])]))
+    with pytest.raises(ValueError, match="10000 features"):
+        TR.gdalwarp(spark, src, str(tmp_path / "cut.tif"), "EPSG:3857",
+                    kernel="near", tile=TS, cutline=cut,
+                    crop_to_cutline=True)
