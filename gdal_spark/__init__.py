@@ -9,7 +9,7 @@ as distributed DataFrame operators:
 - WKB geometry codec + vectorized numpy geometry kernels (geo.wkb, geo.geom)
 - point-in-polygon joins: broadcast and cell-partitioned shuffle paths,
   with hot-cell salting (operators.pip_join)
-- cell-local kNN with ring expansion (operators.knn)
+- cell-local kNN in two lazy passes over cell rectangles (operators.knn)
 - rasterize / polygonize / warp / tile pyramid (raster.*)
 - OGR-SQL semantic parity pieces: first-match LEFT JOIN, ILIKE-style
   LIKE, whole-relation aggregates (operators.ogr_sql)

@@ -1,37 +1,45 @@
-"""Cell-local k-nearest-neighbors via ring expansion.
+"""Cell-local k-nearest-neighbors: one lazy two-pass plan.
 
 Reference semantics: GDAL's gridding nearest-neighbor search
 (alg/gdalgrid.cpp:242-331 `GDALGridInverseDistanceToAPowerNearestNeighbor`
 — CPLQuadTree radius probe bounded by nMaxPoints, plain nearest
 `GDALGridNearestNeighbor`), ties resolved by distance. Our engine
 restates the quadtree probe as the north star's "cell-local kNN via
-sorted-neighbor expansion over ring queries":
+ring queries", in two bounded passes instead of a widening search:
 
- 1. candidate data points for a query come from the Chebyshev ring-r
-    neighborhood of the query's cell (the grid_disk analog on the
-    Morton grid). Ring cells are generated as a (2r+1)^2 OFFSET table
-    cross-joined to the queries with pure column math — no driver
-    collection, so the query side may itself be huge;
- 2. each pass is a plain equi-join on cell_id + per-query top-k;
- 3. a query is finished when its k-th best distance provably beats
-    anything outside the searched window. The bound is computed
-    EXACTLY per query from the window's tile boundaries: the searched
-    rectangle's lon edges and (inverse-mercator) lat edges — this is
-    latitude-aware, because a mercator cell's height in degrees
-    shrinks by cos(lat) toward the poles, so a constant-cells bound
-    would be wrong off the equator;
- 4. ring doubles until it covers the whole grid, at which point the
-    final pass joins the remaining stragglers against the full cell
-    relation — range-enumerated JVM-side when the grid is coarse,
-    the DISTINCT occupied-cell relation when it is fine (bounded by
-    the data, not by grid resolution) — still the same cell
-    equi-join, so the data side is hash-partitioned once per pass
-    rather than replicated per query. Exact for all inputs, with no
-    cross-join cliff on either side;
- 5. before any of that, two cheap counts decide whether the whole
-    brute-force candidate volume is small enough that ring rounds
-    cost more than scoring every pair once (AQE-style adaptive
-    strategy choice — never fires at scale).
+ 1. pass 1 takes each query's top-k inside the Chebyshev window of
+    radius `initial_ring` around its tile (the grid_disk analog on the
+    Morton grid);
+ 2. a query with k hits takes its k-th distance `kd` as a bound and
+    searches, in pass 2, the tile rectangle covering
+    tile_x(qx -+ sqrt(kd)) x tile_y(qy +- sqrt(kd)), padded by one
+    tile on each side and clamped to the grid;
+ 3. a query with fewer than k hits (a straggler) is scored against
+    every data point, with the stragglers broadcast.
+
+Both passes generate their cells per query with pure column math
+(explode(sequence) on each axis -> cell id) and equi-join the data on
+cell id, so the data is never replicated per query. With
+`initial_ring` set the plan is lazy: no Spark job runs before the
+caller's action, and nothing is cached.
+
+Why pass 2 is exact. Pass 1 scores a subset of the data, so the true
+k-th nearest point is no farther than pass 1's k-th: every true top-k
+point, including one that ties on dist2 and wins on neighbor_id, has
+dist2 <= kd, hence |dlon| <= sqrt(kd) and |dlat| <= sqrt(kd).
+tile_x is monotone in lon and tile_y in lat (both clamp to the grid),
+so that point's tile lies inside the rectangle, and the top-k over the
+rectangle equals the top-k over all data. The one-tile pad absorbs the
+rounding of sqrt and of qx +- sqrt(kd), and any ulp-level difference
+between the encoder that assigned the data's cell ids (numpy
+`cells.cell_encode_np`, or the JVM `tile_x_col`/`tile_y_col`) and the
+JVM encoder used here. Distances are not wrapped at the antimeridian,
+so neither is the rectangle.
+
+When `initial_ring` is None, two counts first decide whether the whole
+brute-force candidate volume is small enough that scoring every pair
+once beats the two passes (measured ~2x faster on tiny inputs); above
+that the two passes run from radius 1.
 
 Distances are squared-euclidean in lon/lat degrees — matching the
 DuckDB oracle's arithmetic bit-for-bit (identical doubles in, exactly
@@ -40,179 +48,86 @@ rounded IEEE products/sums out).
 
 from __future__ import annotations
 
-import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..geo import cells, mercator
 
 
-def _ring_offsets(spark, ring: int) -> DataFrame:
-    """(dx, dy) Chebyshev-disk offset table. Small rings build from a
-    driver-local list (cheapest to broadcast, no extra stage); large
-    rings generate JVM-side (spark.range cross product) so the
-    full-coverage passes never materialize a huge driver list."""
-    side = 2 * ring + 1
-    if side * side <= 66_000:
-        offs = [(dx, dy) for dx in range(-ring, ring + 1)
-                for dy in range(-ring, ring + 1)]
-        return spark.createDataFrame(offs, "dx int, dy int")
-    dxs = spark.range(side).select((F.col("id") - ring).cast("int").alias("dx"))
-    dys = spark.range(side).select((F.col("id") - ring).cast("int").alias("dy"))
-    return dxs.crossJoin(dys)
-
-
-def _lat_of_tile_row_col(row: F.Column, res: int) -> F.Column:
-    """Latitude of the NORTH edge of XYZ tile row `row` (JVM math:
-    inverse mercator of my = OS - row * cell_m)."""
-    n = 1 << res
-    my = F.lit(mercator.ORIGIN_SHIFT) - row.cast("double") * F.lit(
-        2.0 * mercator.ORIGIN_SHIFT / n)
-    return (F.atan(F.exp(my / F.lit(mercator.EARTH_RADIUS))) * F.lit(2.0)
-            - F.lit(np.pi / 2.0)) * F.lit(180.0 / np.pi)
-
-
 def knn_join(data: DataFrame, queries: DataFrame, k: int = 5,
-             res: int = cells.DEFAULT_RES, max_ring: int = 8,
-             id_col: str = "doc_id", lon_col: str = "lon",
-             lat_col: str = "lat",
+             res: int = cells.DEFAULT_RES, id_col: str = "doc_id",
+             lon_col: str = "lon", lat_col: str = "lat",
              initial_ring: int | None = None) -> DataFrame:
     """-> (q_id, rank, neighbor_id, dist2): exact k nearest data points
     per query (self excluded by id), ties by neighbor id.
 
-    initial_ring=None auto-sizes the first ring from the data density
-    (expected candidates in a disk of Chebyshev radius r is
-    (2r+1)^2 * rows_per_cell; we aim for ~3k candidates) — each wasted
-    widening round costs a full join pass, so starting near the right
-    radius matters more than the extra count() it takes to estimate.
+    `data` carries `cell_id` at resolution `res`. `initial_ring` is the
+    pass-1 Chebyshev radius; None picks brute force for small inputs
+    (two counts) and radius 1 otherwise.
     """
-    spark = data.sparkSession
     n = 1 << res
-    brute_force = False
-    if initial_ring is None:
-        d_cnt = data.count()
-        rows_per_cell = max(d_cnt / float(4 ** res), 1e-9)
-        est = (np.sqrt(3.0 * k / rows_per_cell) - 1.0) / 2.0
-        initial_ring = int(min(max(1, np.ceil(est)), max_ring))
-        # Adaptive strategy choice (AQE-style): if the whole
-        # brute-force candidate volume is small, the ring machinery's
-        # per-round driver actions (persist + isEmpty per doubling)
-        # cost more than just scoring every pair once. Two cheap
-        # counts decide; at scale (billions x millions) this never
-        # fires and the ring path runs unchanged.
-        if d_cnt <= 10_000_000 and d_cnt * queries.count() <= 50_000_000:
-            brute_force = True
     d = data.select(F.col(id_col).alias("neighbor_id"),
                     F.col(lon_col).alias("nx"), F.col(lat_col).alias("ny"),
                     F.col("cell_id").alias("d_cell"))
-    q = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(lon_col).alias("qx"), F.col(lat_col).alias("qy"),
-        mercator.tile_x_col(F.col(lon_col), res).alias("qtx"),
-        mercator.tile_y_col(F.col(lat_col), res).alias("qty"),
-    )
+    q = queries.select(F.col(id_col).alias("q_id"),
+                       F.col(lon_col).alias("qx"), F.col(lat_col).alias("qy"))
 
     dist2 = (F.col("nx") - F.col("qx")) * (F.col("nx") - F.col("qx")) + \
             (F.col("ny") - F.col("qy")) * (F.col("ny") - F.col("qy"))
     w = Window.partitionBy("q_id").orderBy(F.asc("dist2"), F.asc("neighbor_id"))
-    BIG = 1.0e18
+    out = ("q_id", "rank", "neighbor_id", "dist2")
 
-    def topk_within(cand: DataFrame) -> DataFrame:
+    def topk(cand: DataFrame) -> DataFrame:
         return (cand.filter(F.col("neighbor_id") != F.col("q_id"))
                 .withColumn("dist2", dist2)
                 .withColumn("rank", F.row_number().over(w))
                 .filter(F.col("rank") <= k))
 
-    def safe_dist2(ring: int) -> F.Column:
-        """Exact squared distance from the query point to the nearest
-        edge of the fully-searched window (per-query columns)."""
-        # lon edges of the searched window [qtx-ring, qtx+ring]
-        left = (F.col("qtx") - ring) / F.lit(float(n)) * 360.0 - 180.0
-        right = (F.col("qtx") + ring + 1) / F.lit(float(n)) * 360.0 - 180.0
-        sx = F.when(F.lit(2 * ring + 1 >= n), F.lit(BIG)).otherwise(
-            F.least(F.col("qx") - left, right - F.col("qx")))
-        # lat edges: window rows [qty-ring, qty+ring]; a window touching
-        # the grid edge has nothing beyond it (points clamp into edge
-        # rows) -> that side is safe at any distance
-        lat_n = _lat_of_tile_row_col(F.col("qty") - ring, res)
-        lat_s = _lat_of_tile_row_col(F.col("qty") + ring + 1, res)
-        sn = F.when(F.col("qty") - ring <= 0, F.lit(BIG)).otherwise(
-            lat_n - F.col("qy"))
-        ss = F.when(F.col("qty") + ring >= n - 1, F.lit(BIG)).otherwise(
-            F.col("qy") - lat_s)
-        s = F.least(sx, sn, ss)
-        return s * s
+    def brute(qs: DataFrame) -> DataFrame:
+        return topk(qs.crossJoin(d))
 
-    if brute_force or initial_ring >= max_ring:
-        # the density estimate says the search disk must cover
-        # (almost) the whole grid, which also means the data set is
-        # small (rows << k * 4^res) — the ring machinery would only
-        # add per-round scheduling overhead before reaching the same
-        # exhaustive pass, so run it directly (sparse-data fast path;
-        # Spark broadcasts the small data side of the nested loop)
-        return (topk_within(q.crossJoin(d))
-                .select("q_id", "rank", "neighbor_id", "dist2"))
+    def clamp(t: Column) -> Column:
+        return F.greatest(F.least(t, F.lit(n - 1)), F.lit(0))
 
-    ring = initial_ring
-    result = None
-    pending = q
-    while True:
-        if ring >= n:
-            # Exhaustive pass: pending stragglers must see every data
-            # point. Candidate grain is pending x ALL CELLS, never
-            # pending x (2n+1)^2 Chebyshev offsets — the offset table
-            # is 4x the grid and needs a per-query dedup. Two shapes:
-            #  - coarse grid (n^2 small): enumerate the n^2 cells
-            #    JVM-side (spark.range — no data-side pass at all);
-            #  - fine grid (n^2 huge, e.g. z15 = 1G cells): join
-            #    against the DISTINCT occupied-cell relation instead,
-            #    which is bounded by the data, not the resolution —
-            #    one extra data shuffle buys a candidate set that no
-            #    longer scales with the grid.
-            # Either way it stays the same cell equi-join: the data
-            # side is hash-shuffled once, never replicated per query;
-            # pending (few stragglers by now) is the broadcast side.
-            if n * n <= 1_048_576:
-                occ = (spark.range(n * n)
-                       .select(cells.cell_from_tile_col(
-                           (F.col("id") % n).cast("int"),
-                           (F.col("id") / n).cast("int"), res)
-                           .alias("d_cell")))
-            else:
-                occ = d.select("d_cell").distinct()
-            expand = F.broadcast(
-                pending.select("q_id", "qx", "qy")).crossJoin(occ)
-            topk = topk_within(expand.join(d, "d_cell"))
-            # whole grid searched: every pending query is complete
-            # (queries with < k total data rows emit what exists)
-            rest = topk.select("q_id", "rank", "neighbor_id", "dist2")
-            return rest if result is None else result.unionByName(rest)
-        offs = _ring_offsets(spark, ring)
-        expand = (pending.crossJoin(F.broadcast(offs))
-                  .withColumn("etx", F.pmod(F.col("qtx") + F.col("dx"), F.lit(n)))
-                  .withColumn("ety", F.col("qty") + F.col("dy"))
-                  .filter((F.col("ety") >= 0) & (F.col("ety") < n))
-                  .withColumn("d_cell", cells.cell_from_tile_col(
-                      F.col("etx"), F.col("ety"), res))
-                  .drop("dx", "dy", "etx", "ety").dropDuplicates(
-                      ["q_id", "d_cell"]))
-        cand = expand.join(d, "d_cell")
-        topk = topk_within(cand)
-        done_q = (topk.groupBy("q_id")
-                  .agg(F.count(F.lit(1)).alias("n_hits"),
-                       F.max("dist2").alias("kd"),
-                       F.first("qtx").alias("qtx"), F.first("qty").alias("qty"),
-                       F.first("qx").alias("qx"), F.first("qy").alias("qy"))
-                  .filter((F.col("n_hits") == k)
-                          & (F.col("kd") <= safe_dist2(ring)))
-                  .select("q_id").persist())
-        done_rows = (topk.join(F.broadcast(done_q), "q_id", "inner")
-                     .select("q_id", "rank", "neighbor_id", "dist2"))
-        result = done_rows if result is None else result.unionByName(done_rows)
-        pending = pending.join(F.broadcast(done_q), "q_id", "left_anti").persist()
-        if pending.isEmpty():
-            return result
-        ring *= 2
+    def in_rect(qs: DataFrame, x0: Column, x1: Column, y0: Column,
+                y1: Column) -> DataFrame:
+        """Data rows in each query's tile rectangle [x0, x1] x [y0, y1]."""
+        return (qs.select("q_id", "qx", "qy",
+                          F.explode(F.sequence(x0, x1)).alias("tx"),
+                          F.sequence(y0, y1).alias("tys"))
+                .select("q_id", "qx", "qy", "tx", F.explode("tys").alias("ty"))
+                .select("q_id", "qx", "qy", cells.cell_from_tile_col(
+                    F.col("tx"), F.col("ty"), res).alias("d_cell"))
+                .join(d, "d_cell"))
+
+    if initial_ring is None:
+        d_cnt = data.count()
+        if d_cnt <= 10_000_000 and d_cnt * queries.count() <= 50_000_000:
+            return brute(q).select(*out)
+        initial_ring = 1
+
+    r = initial_ring
+    tx = mercator.tile_x_col(F.col("qx"), res)
+    ty = mercator.tile_y_col(F.col("qy"), res)
+    kth = (topk(in_rect(q, clamp(tx - r), clamp(tx + r), clamp(ty - r),
+                        clamp(ty + r)))
+           .filter(F.col("rank") == k)
+           .select("q_id", "qx", "qy", F.col("dist2").alias("kd")))
+
+    s = F.sqrt(F.col("kd"))
+    near = topk(in_rect(
+        kth,
+        clamp(mercator.tile_x_col(F.col("qx") - s, res) - 1),
+        clamp(mercator.tile_x_col(F.col("qx") + s, res) + 1),
+        clamp(mercator.tile_y_col(F.col("qy") + s, res) - 1),
+        clamp(mercator.tile_y_col(F.col("qy") - s, res) + 1)))
+    # broadcast the finished ids and the few stragglers: the optimizer
+    # pushes the anti join below a join that built `queries`, where a
+    # shuffled one would shuffle every data row. The small-input branch
+    # above leaves the build side to Spark, which broadcasts the data.
+    stragglers = q.join(F.broadcast(kth.select("q_id")), "q_id", "left_anti")
+    return near.select(*out).unionByName(
+        brute(F.broadcast(stragglers)).select(*out))
 
 
 def knn_oracle_sql(pts_sql: str, k: int, q_filter_sql: str) -> str:

@@ -164,6 +164,10 @@ def pip_join_broadcast(
     dim-scale polygon sets use pip_join_shuffle, whose cell join plays
     the same role.
     """
+    if how not in ("inner", "left", "semi", "anti"):
+        raise ValueError(
+            f"pip_join_broadcast: how={how!r}; expected 'inner', 'left', "
+            "'semi' or 'anti'")
     poly_rows = [(int(r["poly_id"]), bytes(r["geom"]))
                  for r in polys.select("poly_id", "geom").collect()]
     bpolys = points.sparkSession.sparkContext.broadcast(poly_rows)

@@ -26,8 +26,10 @@ _PTS = f"SELECT doc_id, {pages.LON_SQL} AS lon, {pages.LAT_SQL} AS lat FROM docu
 @register("geo_knn_ring",
           oracle=knn.knn_oracle_sql(_PTS, k=5, q_filter_sql="doc_id % 25 = 0"))
 def knn_ring(spark, sf_dir):
-    """Exact kNN via cell-ring expansion (GDAL grid NN analog,
-    alg/gdalgrid.cpp:242) vs a brute-force SQL oracle."""
+    """Exact kNN (GDAL grid NN analog, alg/gdalgrid.cpp:242) vs a
+    brute-force SQL oracle. At registry sizes the operator's two counts
+    pick its brute-force branch; the two-pass cell search is tested in
+    tests/test_knn.py."""
     pts = pages.page_points(spark, sf_dir).select("doc_id", "lon", "lat", "cell_id")
     qs = pts.filter(F.col("doc_id") % 25 == 0)
     return knn.knn_join(pts, qs, k=5).orderBy("q_id", "rank")

@@ -15,8 +15,8 @@ Two physical strategies, bit-identical outputs:
 
   ring (scale path, no driver collect) — the distributed restatement
       of the reference's outward search: (1) a tile-level ring search
-      (the kNN ring-join pattern one level coarser: offsets cross-join
-      + equi-join on target TILE keys, ring doubling) finds each output
+      (Chebyshev offset table cross-join + equi-join on target TILE
+      keys, ring doubling) finds each output
       tile's Chebyshev distance r0 to its nearest target tile; (2) each
       tile gathers all targets within the provably-sufficient radius
       R = ceil(sqrt(2) * (r0 + 1)) + 1 tiles — any target outside R is
@@ -36,10 +36,24 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.knn import _ring_offsets
 from . import grid as G
 
 MAX_BROADCAST_TARGETS = 2_000_000
+
+
+def _ring_offsets(spark, ring: int) -> DataFrame:
+    """(dx, dy) Chebyshev-disk offset table. Small rings build from a
+    driver-local list (cheapest to broadcast, no extra stage); large
+    rings generate JVM-side (spark.range cross product) so rings as
+    wide as the grid never materialize a huge driver list."""
+    side = 2 * ring + 1
+    if side * side <= 66_000:
+        offs = [(dx, dy) for dx in range(-ring, ring + 1)
+                for dy in range(-ring, ring + 1)]
+        return spark.createDataFrame(offs, "dx int, dy int")
+    dxs = spark.range(side).select((F.col("id") - ring).cast("int").alias("dx"))
+    dys = spark.range(side).select((F.col("id") - ring).cast("int").alias("dy"))
+    return dxs.crossJoin(dys)
 
 
 def _targets_of(tiles: DataFrame, spec: G.GridSpec) -> DataFrame:

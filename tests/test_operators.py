@@ -5,6 +5,7 @@ text invariant holds end-to-end."""
 import re
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from gdal_spark.geo import geom, wkb
@@ -88,6 +89,16 @@ def test_pip_broadcast_plan_shape(spark, sf_dir, monkeypatch):
         assert ops.count("MapInPandas") == 1, (how, ops)
         assert "Filter" in ops, (how, ops)
         assert ops.count("Union") == (how in ("left", "anti")), (how, ops)
+
+
+def test_pip_broadcast_rejects_unknown_how(spark, sf_dir):
+    """An unknown join mode raises when the join is built, on both
+    sides of the 256-polygon prefilter cut."""
+    pts = pages.page_points(spark, sf_dir).select("doc_id", "lon", "lat")
+    for n_polys in (24, 300):
+        with pytest.raises(ValueError, match="'outer'"):
+            pip_join.pip_join_broadcast(
+                pts, admin.admin_df(spark, n_polys), how="outer")
 
 
 def test_pip_shuffle_equals_broadcast(spark, sf_dir):
