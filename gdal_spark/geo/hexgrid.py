@@ -147,7 +147,7 @@ def grid_disk_offsets(k: int) -> list[tuple[int, int]]:
     """All axial offsets within hex-grid distance k of the origin —
     1 + 3k(k+1) cells, every ring an EXACT distance ring (the hex
     advantage over Chebyshev square rings). Driver-local literal list
-    for broadcast, like proximity._ring_offsets."""
+    for broadcast."""
     return [(dq, dr)
             for dq in range(-k, k + 1)
             for dr in range(max(-k, -dq - k), min(k, -dq + k) + 1)]

@@ -154,15 +154,17 @@ def pip_join_broadcast(
     A point matching k polygons emits k rows (inner/left), matching the
     reference's pairwise layer algebra.
 
-    Up to 256 polygons, stage 1 of the reference's accept ladder
-    (envelope reject, ogrlayer.cpp:3994) runs INSIDE Catalyst codegen:
-    an OR of per-polygon bbox range predicates drops every point that
-    can match nothing BEFORE the Arrow exchange, so the Python stage
-    only sees candidate rows (~the polygons' combined bbox coverage).
-    Past that the OR-chain stops paying (expression size) and the
-    in-task grid index carries the bbox stage instead; beyond
-    dim-scale polygon sets use pip_join_shuffle, whose cell join plays
-    the same role.
+    For inner/semi with up to 256 polygons, stage 1 of the reference's
+    accept ladder (envelope reject, ogrlayer.cpp:3994) runs INSIDE
+    Catalyst codegen: an OR of per-polygon bbox range predicates drops
+    every point that can match nothing BEFORE the Arrow exchange, so
+    the Python stage only sees candidate rows (~the polygons' combined
+    bbox coverage). Past that the OR-chain stops paying (expression
+    size) and the in-task grid index carries the bbox stage instead;
+    beyond dim-scale polygon sets use pip_join_shuffle, whose cell join
+    plays the same role. left/anti keep every point, so all points go
+    to the exact stage, which emits the misses itself: one scan of the
+    points source.
     """
     if how not in ("inner", "left", "semi", "anti"):
         raise ValueError(
@@ -171,7 +173,7 @@ def pip_join_broadcast(
     poly_rows = [(int(r["poly_id"]), bytes(r["geom"]))
                  for r in polys.select("poly_id", "geom").collect()]
     bpolys = points.sparkSession.sparkContext.broadcast(poly_rows)
-    if not poly_rows or len(poly_rows) > 256:
+    if how in ("left", "anti") or not poly_rows or len(poly_rows) > 256:
         return _exact_stage(points, poly_rows, bpolys, lon_col, lat_col, how)
 
     lon, lat = F.col(lon_col), F.col(lat_col)
@@ -181,20 +183,8 @@ def pip_join_broadcast(
         p = lon.between(float(minx), float(maxx)) & \
             lat.between(float(miny), float(maxy))
         bbox_pred = p if bbox_pred is None else (bbox_pred | p)
-    # NULL lon/lat satisfies NEITHER bbox_pred nor ~bbox_pred (both
-    # evaluate to NULL) — route such rows into `rest` explicitly so
-    # left/anti keep them (NaN in the exact stage never matches)
-    null_coord = lon.isNull() | lat.isNull()
-    cand = points.filter(bbox_pred & ~null_coord)
-    core = _exact_stage(cand, poly_rows, bpolys, lon_col, lat_col, how)
-    if how == "inner" or how == "semi":
-        return core
-    rest = points.filter(~bbox_pred | null_coord)
-    if how == "anti":
-        return core.unionByName(rest)
-    # left: non-candidates pass through with NULL poly_id
-    return core.unionByName(
-        rest.withColumn("poly_id", F.lit(None).cast("int")))
+    return _exact_stage(points.filter(bbox_pred), poly_rows, bpolys,
+                        lon_col, lat_col, how)
 
 
 def _exact_stage(points: DataFrame, poly_rows, bpolys, lon_col: str,

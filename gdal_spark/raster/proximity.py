@@ -4,36 +4,36 @@ Reference: alg/gdalproximity.cpp:94 `GDALComputeProximity` — for each
 pixel, the euclidean PIXEL distance to the nearest pixel whose value
 is in the target set, capped at maxdist (beyond -> nodata/maxdist).
 The reference runs a two-pass chamfer over scanlines (approximate at
-the margins); both of our strategies are EXACT.
+the margins); both of our paths are EXACT and bit-identical.
 
-Two physical strategies, bit-identical outputs:
+`proximity` picks the path from the target count, read by one driver
+fetch of at most MAX_BROADCAST_TARGETS + 1 target pixels that also
+supplies the broadcast arrays:
 
   broadcast — target pixels of a density-style raster are its sparse
       nonzero relation, usually MUCH smaller than the raster: ship the
       target coordinate array to every task and compute each tile's
-      distance field vectorized. Guarded by MAX_BROADCAST_TARGETS.
+      distance field vectorized. Up to MAX_BROADCAST_TARGETS.
 
-  ring (scale path, no driver collect) — the distributed restatement
-      of the reference's outward search: (1) a tile-level ring search
-      (Chebyshev offset table cross-join + equi-join on target TILE
-      keys, ring doubling) finds each output
-      tile's Chebyshev distance r0 to its nearest target tile; (2) each
-      tile gathers all targets within the provably-sufficient radius
-      R = ceil(sqrt(2) * (r0 + 1)) + 1 tiles — any target outside R is
-      farther from every pixel of the tile than the nearest one, so the
-      per-tile vectorized min over the gathered candidates is the exact
-      answer; (3) with a finite max_dist, gathering caps at
-      ceil(max_dist/tile) + 1 rings and never-reached tiles emit pure
-      nodata. Work per tile scales with local target density, and the
-      target relation is only ever hash-joined on tile keys — at 100 TB
-      nothing funnels through the driver.
+  level bound (`proximity_ring`, scale path) — one lazy plan: (1) an
+      upper bound `ub` on each output tile's Chebyshev distance r0, in
+      tiles, to its nearest target tile, read from the target-tile
+      occupancy of a block hierarchy (blocks of 2^l tiles, l =
+      0..ceil(log2 r_cap)) through one 3x3-block probe per level;
+      (2) each tile gathers every target tile within the rectangle of
+      radius R = ceil(sqrt(2) * (ub + 1)) + 1 tiles, clamped to r_cap,
+      and takes the vectorized per-pixel min. A target tile is one row
+      holding its targets' coordinate arrays, so the gather moves at
+      most (2R + 1)^2 rows per output tile. Only tile and block keys
+      are hash-joined; nothing goes through the driver once the path
+      is chosen. The exactness proof is on `proximity_ring`.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from . import grid as G
@@ -41,37 +41,31 @@ from . import grid as G
 MAX_BROADCAST_TARGETS = 2_000_000
 
 
-def _ring_offsets(spark, ring: int) -> DataFrame:
-    """(dx, dy) Chebyshev-disk offset table. Small rings build from a
-    driver-local list (cheapest to broadcast, no extra stage); large
-    rings generate JVM-side (spark.range cross product) so rings as
-    wide as the grid never materialize a huge driver list."""
-    side = 2 * ring + 1
-    if side * side <= 66_000:
-        offs = [(dx, dy) for dx in range(-ring, ring + 1)
-                for dy in range(-ring, ring + 1)]
-        return spark.createDataFrame(offs, "dx int, dy int")
-    dxs = spark.range(side).select((F.col("id") - ring).cast("int").alias("dx"))
-    dys = spark.range(side).select((F.col("id") - ring).cast("int").alias("dy"))
-    return dxs.crossJoin(dys)
-
-
-def _targets_of(tiles: DataFrame, spec: G.GridSpec) -> DataFrame:
-    """Sparse target relation: (gx, gy) of nonzero pixels."""
+def _target_tiles(tiles: DataFrame, spec: G.GridSpec) -> DataFrame:
+    """Tiles holding a target: (t_ty, t_tx, gxs, gys), the grid
+    coordinates of the tile's nonzero pixels as two arrays. A tile's
+    row stride is its own width: partial edge tiles are narrower than
+    spec.tile."""
     t = spec.tile
-    return (tiles.select(
-        "tile_y", "tile_x",
-        F.posexplode("px").alias("pxi", "v"))
-        .filter(F.col("v") != 0)
-        .select((F.col("tile_x") * t + F.col("pxi") % t).alias("gx"),
-                (F.col("tile_y") * t + (F.col("pxi") / t).cast("int")).alias("gy")))
+    w = F.least(F.lit(t), F.lit(spec.width) - F.col("tile_x") * t)
+    hit = F.filter(F.sequence(F.lit(0), F.size("px") - 1),
+                   lambda i: F.col("px")[i] != 0)
+    return (tiles.select(F.col("tile_y").alias("t_ty"),
+                         F.col("tile_x").alias("t_tx"),
+                         hit.alias("i"), w.alias("w"))
+            .filter(F.size("i") > 0)
+            .select("t_ty", "t_tx",
+                    F.transform("i", lambda i: F.col("t_tx") * t
+                                + i % F.col("w")).alias("gxs"),
+                    F.transform("i", lambda i: F.col("t_ty") * t
+                                + (i / F.col("w")).cast("int")).alias("gys")))
 
 
 def _dist_field(key, cand_x: np.ndarray, cand_y: np.ndarray,
                 spec: G.GridSpec, max_dist: float, nodata: float):
     """Exact per-tile distance field over gathered candidates (chunked
     to bound the (pixels x candidates) matrix). Shared by both
-    strategies so they are bit-identical."""
+    paths so they are bit-identical."""
     t = spec.tile
     ty_, tx_ = int(key[0]), int(key[1])
     h, w = spec.tile_shape(ty_, tx_)
@@ -95,27 +89,20 @@ def _dist_field(key, cand_x: np.ndarray, cand_y: np.ndarray,
 
 def proximity(tiles: DataFrame, spec: G.GridSpec,
               max_dist: float = float("inf"),
-              nodata: float = -1.0,
-              strategy: str = "auto") -> DataFrame:
+              nodata: float = -1.0) -> DataFrame:
     """-> distance tiles over the SAME tile set. Pixels farther than
     max_dist from every target get `nodata` (gdalproximity maxdist
     semantics). Distance unit: pixels.
 
-    strategy: 'broadcast' | 'ring' | 'auto' (broadcast while the
-    target count fits the budget, else ring)."""
-    if strategy == "ring":
+    Up to MAX_BROADCAST_TARGETS target pixels are fetched once and
+    broadcast; past that the scale path `proximity_ring` runs, after
+    this one fetch of MAX_BROADCAST_TARGETS + 1 rows to the driver."""
+    tbl = (_target_tiles(tiles, spec).select(F.inline(F.arrays_zip("gxs", "gys")))
+           .limit(MAX_BROADCAST_TARGETS + 1).toArrow())
+    if tbl.num_rows > MAX_BROADCAST_TARGETS:
         return proximity_ring(tiles, spec, max_dist, nodata)
-    targets = _targets_of(tiles, spec)
-    if strategy == "auto" and targets.limit(
-            MAX_BROADCAST_TARGETS + 1).count() > MAX_BROADCAST_TARGETS:
-        return proximity_ring(tiles, spec, max_dist, nodata)
-    rows = targets.collect()
-    if len(rows) > MAX_BROADCAST_TARGETS:
-        raise ValueError(
-            f"{len(rows)} target pixels exceed the broadcast budget; "
-            "use strategy='ring'")
-    tx = np.array([r["gx"] for r in rows], dtype=np.float64)
-    ty = np.array([r["gy"] for r in rows], dtype=np.float64)
+    tx = tbl.column("gxs").to_numpy().astype(np.float64)
+    ty = tbl.column("gys").to_numpy().astype(np.float64)
     b = tiles.sparkSession.sparkContext.broadcast((tx, ty))
 
     def dist_tile(key, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -128,88 +115,99 @@ def proximity(tiles: DataFrame, spec: G.GridSpec,
 def proximity_ring(tiles: DataFrame, spec: G.GridSpec,
                    max_dist: float = float("inf"),
                    nodata: float = -1.0) -> DataFrame:
-    """Scale path: tile-level ring search + bounded candidate gather.
-    Exact (bit-identical to the broadcast path); no driver collect of
-    pixel data — only log-many isEmpty round checks."""
-    spark = tiles.sparkSession
-    t = spec.tile
-    targets = (_targets_of(tiles, spec)
-               .withColumn("t_ty", (F.col("gy") / t).cast("int"))
-               .withColumn("t_tx", (F.col("gx") / t).cast("int"))
-               .persist())
-    target_tiles = targets.select("t_ty", "t_tx").distinct().persist()
-    out_keys = tiles.select("tile_y", "tile_x").distinct()
+    """Scale path: a hierarchical bound on each tile's distance to its
+    nearest target tile, then a bounded candidate gather. One lazy
+    plan: no Spark job runs before the caller's action, nothing is
+    cached. Bit-identical to the broadcast path.
 
-    # ring cap: beyond it every target is > max_dist from every pixel
-    # of the tile ((r-1)*t > max_dist), so the tile is pure nodata
+    Why it is exact. r0 is a tile's Chebyshev distance, in tiles, to
+    the nearest tile holding a target; r_cap is the radius past which
+    every target is farther than max_dist from every pixel of the tile
+    (a tile at Chebyshev r holds no pixel within (r - 1) * t), or the
+    grid's extent when max_dist is infinite. At level l, tiles group
+    into blocks of 2^l x 2^l (block key = tile >> l).
+    - Upper bound. A target tile in a block at Chebyshev block offset
+      c <= 1 from the tile's own block lies within (c + 1) * 2^l - 1
+      tiles of it on each axis, so r0 <= ub = min over every hit of
+      (c + 1) * 2^l - 1.
+    - Completeness. At the top level L = ceil(log2 r_cap), 2^L >= r_cap:
+      a target tile within r_cap tiles differs by at most one block on
+      each axis, so it is a hit. A tile with no hit at any level has
+      no target within r_cap: it is pure nodata, as it should be.
+    - Gather. The nearest target is within sqrt(2) * (r0 + 1) * t
+      pixels of every pixel of the tile; a tile at Chebyshev r' holds
+      no pixel closer than (r' - 1) * t. So every target that can be
+      a pixel's nearest lies within R(r0) = ceil(sqrt(2) * (r0 + 1)) + 1
+      tiles. R only grows with its argument, so R(ub) >= R(r0), and
+      clamping at r_cap drops only targets beyond max_dist. The
+      per-pixel min over the gathered superset is the true min.
+    """
+    t = spec.tile
     grid_reach = max(spec.tiles_y, spec.tiles_x)
     if np.isfinite(max_dist):
         r_cap = min(int(np.ceil(max_dist / t)) + 1, grid_reach)
     else:
         r_cap = grid_reach
+    top = (r_cap - 1).bit_length()  # ceil(log2 r_cap)
 
-    # phase 1: Chebyshev tile distance r0 to the nearest target tile,
-    # by doubling window probes (exact: a window of radius r contains
-    # every tile with cheb <= r, so the min over hits is the true r0)
-    cheb = F.greatest(F.abs(F.col("dy")), F.abs(F.col("dx")))
-    found = None
-    pending = out_keys
-    ring = 1
-    while True:
-        ring = min(ring, r_cap)
-        offs = _ring_offsets(spark, ring)
-        expand = (pending.crossJoin(F.broadcast(offs))
-                  .select("tile_y", "tile_x",
-                          (F.col("tile_y") + F.col("dy")).alias("t_ty"),
-                          (F.col("tile_x") + F.col("dx")).alias("t_tx"),
-                          cheb.alias("cheb")))
-        hits = (expand.join(target_tiles, ["t_ty", "t_tx"])
-                .groupBy("tile_y", "tile_x")
-                .agg(F.min("cheb").alias("r0")).persist())
-        found = hits if found is None else found.unionByName(hits)
-        pending = pending.join(hits.select("tile_y", "tile_x"),
-                               ["tile_y", "tile_x"], "left_anti").persist()
-        if ring >= r_cap or pending.isEmpty():
-            break
-        ring *= 2
+    ttiles = _target_tiles(tiles, spec)
+    keys = tiles.select("tile_y", "tile_x")
 
-    # tiles with no target within r_cap: pure-nodata output
-    def nodata_tile(key, pdf):
-        return _dist_field(key, np.empty(0), np.empty(0), spec,
-                           max_dist, nodata)
+    def shr(c: str) -> Column:
+        return F.call_function("shiftright", F.col(c), F.col("lvl"))
 
-    nodata_tiles = (pending.groupBy("tile_y", "tile_x")
-                    .applyInPandas(nodata_tile, G.TILE_SCHEMA))
+    occ = (ttiles.select("t_ty", "t_tx",
+                         F.explode(F.sequence(F.lit(0), F.lit(top))).alias("lvl"))
+           .select("lvl", shr("t_ty").alias("by"), shr("t_tx").alias("bx"))
+           .distinct())
+    # probe i -> level i // 9, block offset (i % 9 // 3 - 1, i % 3 - 1)
+    probe = (keys.select("tile_y", "tile_x", F.explode(
+                 F.sequence(F.lit(0), F.lit(9 * top + 8))).alias("i"))
+             .select("tile_y", "tile_x",
+                     (F.col("i") / 9).cast("int").alias("lvl"),
+                     ((F.col("i") % 9 / 3).cast("int") - 1).alias("dy"),
+                     (F.col("i") % 3 - 1).alias("dx"))
+             .select("tile_y", "tile_x", "lvl",
+                     (shr("tile_y") + F.col("dy")).alias("by"),
+                     (shr("tile_x") + F.col("dx")).alias("bx"),
+                     F.greatest(F.abs("dy"), F.abs("dx")).alias("c")))
+    ub = (probe.join(occ, ["lvl", "by", "bx"])
+          .groupBy("tile_y", "tile_x")
+          .agg(F.min(F.call_function("shiftleft", F.col("c") + 1, F.col("lvl"))
+                     - 1).alias("ub")))
 
-    # phase 2: gather every target within R(r0) rings and take the
-    # exact per-pixel min. R bound: nearest target is within
-    # (r0+1)*t*sqrt(2) of any pixel; a tile at cheb r' holds no pixel
-    # closer than (r'-1)*t, so r' <= 1 + sqrt(2)*(r0+1) suffices.
-    r_gather = F.least(
-        (F.ceil(F.lit(float(np.sqrt(2.0))) * (F.col("r0") + 1)) + 1),
-        F.lit(r_cap)).cast("int")
-    g = found.withColumn("rg", r_gather)
-    max_rg_row = g.agg(F.max("rg")).collect()[0][0]
-    if max_rg_row is None:  # no targets at all
-        return (out_keys.groupBy("tile_y", "tile_x")
-                .applyInPandas(nodata_tile, G.TILE_SCHEMA))
-    offs = _ring_offsets(spark, int(max_rg_row))
-    cand_tiles = (g.crossJoin(F.broadcast(offs))
-                  .filter(cheb <= F.col("rg"))
-                  .select("tile_y", "tile_x",
-                          (F.col("tile_y") + F.col("dy")).alias("t_ty"),
-                          (F.col("tile_x") + F.col("dx")).alias("t_tx")))
-    cand = (cand_tiles.join(targets, ["t_ty", "t_tx"])
-            .select("tile_y", "tile_x", "gx", "gy"))
+    r = F.least(F.ceil(F.lit(float(np.sqrt(2.0))) * (F.col("ub") + 1)) + 1,
+                F.lit(r_cap)).cast("int")
+
+    def span(c: str, n: int) -> Column:
+        return F.sequence(F.greatest(F.col(c) - F.col("r"), F.lit(0)),
+                          F.least(F.col(c) + F.col("r"), F.lit(n - 1)))
+
+    cand = (ub.withColumn("r", r)
+            .select("tile_y", "tile_x",
+                    F.explode(span("tile_x", spec.tiles_x)).alias("t_tx"),
+                    span("tile_y", spec.tiles_y).alias("tys"))
+            .select("tile_y", "tile_x", "t_tx", F.explode("tys").alias("t_ty"))
+            .join(ttiles, ["t_ty", "t_tx"])
+            .select("tile_y", "tile_x", "gxs", "gys"))
+
+    # one candidate-free row per output tile, so a tile no target
+    # reaches still comes out (as pure nodata)
+    none = F.lit(None).cast("array<int>")
+    cand = cand.unionByName(keys.select("tile_y", "tile_x", none.alias("gxs"),
+                                        none.alias("gys")))
 
     def dist_tile(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        return _dist_field(key, pdf["gx"].to_numpy(np.float64),
-                           pdf["gy"].to_numpy(np.float64),
+        pdf = pdf.dropna()
+        return _dist_field(key, np.concatenate([np.empty(0), *pdf["gxs"]]),
+                           np.concatenate([np.empty(0), *pdf["gys"]]),
                            spec, max_dist, nodata)
 
-    solved = cand.groupBy("tile_y", "tile_x").applyInPandas(
-        dist_tile, G.TILE_SCHEMA)
-    return solved.unionByName(nodata_tiles)
+    # a fixed partition count: adaptive execution would coalesce this
+    # small shuffle onto one or two tasks and serialize the numpy stage
+    n = int(tiles.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return (cand.repartition(n, "tile_y", "tile_x")
+            .groupBy("tile_y", "tile_x").applyInPandas(dist_tile, G.TILE_SCHEMA))
 
 
 def proximity_np(canvas: np.ndarray, max_dist: float = float("inf"),

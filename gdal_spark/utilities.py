@@ -430,7 +430,7 @@ def gdal_proximity(spark: SparkSession, src: str, dst: str,
                    dtype: str = "float64") -> None:
     """`gdal_proximity.py [-maxdist d] src dst` — pixel-unit distance
     to the nearest nonzero pixel (alg/gdalproximity.cpp semantics,
-    broadcast/ring auto strategy)."""
+    broadcast or scale path, chosen by target count)."""
     from .raster import proximity as PX
     from .raster.vrt import open_raster
 

@@ -60,8 +60,9 @@ def _plan_ops(df) -> list[str]:
 
 def test_pip_broadcast_plan_shape(spark, sf_dir, monkeypatch):
     """The plan plan_audit check 3 and the benchmark's pip_join.* layer
-    metrics read: the codegen bbox Filter feeds ONE MapInPandas; left
-    and anti add one Union for the non-candidate rows. The polygons are
+    metrics read: for inner/semi the codegen bbox Filter feeds ONE
+    MapInPandas; left/anti send every point to that MapInPandas. Each
+    mode scans the points source once, with no Union. The polygons are
     collected and broadcast once per call."""
     from pyspark import SparkContext
 
@@ -87,8 +88,9 @@ def test_pip_broadcast_plan_shape(spark, sf_dir, monkeypatch):
     for how, df in joins.items():
         ops = _plan_ops(df)
         assert ops.count("MapInPandas") == 1, (how, ops)
-        assert "Filter" in ops, (how, ops)
-        assert ops.count("Union") == (how in ("left", "anti")), (how, ops)
+        assert ("Filter" in ops) == (how in ("inner", "semi")), (how, ops)
+        assert sum(op.endswith("Scan") for op in ops) == 1, (how, ops)
+        assert "Union" not in ops, (how, ops)
 
 
 def test_pip_broadcast_rejects_unknown_how(spark, sf_dir):

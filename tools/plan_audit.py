@@ -121,15 +121,17 @@ def main() -> None:
           must=[r"Generate", r"FlatMapGroupsInPandas"],
           must_not=[r"CartesianProduct|BroadcastNestedLoopJoin"])
 
-    # 7. proximity ring phase-2 gather: equi-join on tile keys
+    # 7. proximity scale path: the level probe and the gather rectangle
+    #    are JVM Generates (explode over sequence) equi-joined on block
+    #    and tile keys; no cross or nested-loop join
     tiles_df = spark.createDataFrame(
         [(0, 0, np.eye(8).ravel().tolist())],
         "tile_y int, tile_x int, px array<double>")
     pspec = G.GridSpec(8, 8, (0, 1, 0, 8, 0, -1), tile=8)
     pr = PX.proximity_ring(tiles_df, pspec)
     check("proximity ring equi-join gather", plan_of(pr),
-          must=[r"FlatMapGroupsInPandas"],
-          must_not=[r"CartesianProduct"])
+          must=[r"Generate", r"FlatMapGroupsInPandas"],
+          must_not=[r"CartesianProduct|BroadcastNestedLoopJoin"])
 
     # 8. warp dependency relation: computed by a vectorized Python map
     #    over a Range scan (never a driver loop), exploded JVM-side
