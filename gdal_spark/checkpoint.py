@@ -17,9 +17,12 @@ Design (all DataFrame ops, no driver data paths):
    row exists;
  - the manifest (one parquet under `<path>/_manifest/`) carries per
    bucket: row count, order-independent content hash (bit_xor of
-   per-row xxhash64 over all columns), and the key range (lineage:
+   per-row xxhash64 over all columns, hashed natively: an array column
+   by its elements, with no string form), and the key range (lineage:
    min/max of the first key column — for cell-keyed stages this is the
-   cell range served by that bucket);
+   cell range served by that bucket). Manifests written when the hash
+   went through each column's string form fail `verify_stage`; resume
+   reads only their bucket ids, so it still works on them;
  - `run_stage` with an existing manifest anti-joins the input against
    committed buckets and processes ONLY missing buckets — a re-run
    after a mid-write failure (or a second identical run) writes
@@ -44,7 +47,7 @@ def _bucket(df: DataFrame, key_cols: list[str], n_buckets: int) -> DataFrame:
 
 def _row_hash(df: DataFrame):
     cols = [c for c in df.columns if c != "bucket"]
-    return F.xxhash64(*[F.col(c).cast("string") for c in cols])
+    return F.xxhash64(*[F.col(c) for c in cols])
 
 
 def manifest_of(bucketed: DataFrame, key_cols: list[str]) -> DataFrame:

@@ -6,20 +6,23 @@ GDALdllImagePoint: a point burns the pixel containing it).
 Spark-first: pixel assignment is pure JVM column math (floor exprs —
 the same math `gdal raster tile` uses for tile indices), the count per
 pixel is a partial-aggregated groupBy, and tile assembly is one
-`applyInPandas` per tile. The sparse (pixel -> count) relation IS the
+streaming `mapInArrow` over the pixels sorted by tile
+(`tilebatch.densify`: one numpy scatter per Arrow batch, no Python
+call per tile). The sparse (pixel -> count) relation IS the
 scale-friendly representation at 10^12 rows; dense tile arrays only
-materialize per task.
+materialize per task, a bounded batch at a time.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..geo import mercator
 from . import grid as G
+from . import tilebatch as TB
 
 
 def global_pixel_cols_3857(lon: Column, lat: Column, zoom: int,
@@ -35,10 +38,10 @@ def global_pixel_cols_3857(lon: Column, lat: Column, zoom: int,
     return gx, gy
 
 
-def points_to_pixel_counts(points: DataFrame, zoom: int, tile: int = 256,
-                           lon_col: str = "lon", lat_col: str = "lat",
-                           weight_col: str | None = None) -> DataFrame:
-    """-> (tile_y, tile_x, pxi, v): sparse pixel counts (or weight sums).
+def global_pixel_counts(points: DataFrame, zoom: int, tile: int = 256,
+                        lon_col: str = "lon", lat_col: str = "lat",
+                        weight_col: str | None = None) -> DataFrame:
+    """-> (gx, gy, v): sparse counts (or weight sums) per global pixel.
 
     One shuffle (groupBy pixel) with map-side partial aggregation; at
     10^12 input rows the output is bounded by the number of nonzero
@@ -47,55 +50,56 @@ def points_to_pixel_counts(points: DataFrame, zoom: int, tile: int = 256,
     gx, gy = global_pixel_cols_3857(F.col(lon_col), F.col(lat_col), zoom, tile)
     with_px = points.withColumn("gx", gx).withColumn("gy", gy)
     agg = (F.sum(weight_col) if weight_col else F.count(F.lit(1))).cast("double")
-    return (
-        with_px.groupBy("gx", "gy").agg(agg.alias("v"))
-        .select(
-            (F.col("gy") / tile).cast("int").alias("tile_y"),
+    return with_px.groupBy("gx", "gy").agg(agg.alias("v"))
+
+
+def tile_pixel_cols(tile: int) -> list[Column]:
+    """(gx, gy) -> [tile_y, tile_x, pxi]: the tile holding the pixel and
+    the pixel's row-major index inside it."""
+    return [(F.col("gy") / tile).cast("int").alias("tile_y"),
             (F.col("gx") / tile).cast("int").alias("tile_x"),
-            ((F.col("gy") % tile) * tile + (F.col("gx") % tile)).alias("pxi"),
-            F.col("v"),
-        )
-    )
+            ((F.col("gy") % tile) * tile + (F.col("gx") % tile)).alias("pxi")]
 
 
-def pixel_counts_to_tiles(pixels: DataFrame, spec: G.GridSpec) -> DataFrame:
-    """Assemble sparse pixels into dense tile rows (tile_y, tile_x, px)."""
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        ty, tx = int(key[0]), int(key[1])
-        h, w = spec.tile_shape(ty, tx)
-        canvas = np.zeros(h * w, dtype=np.float64)
-        canvas[pdf["pxi"].to_numpy(np.int64)] = pdf["v"].to_numpy(np.float64)
-        return pd.DataFrame({"tile_y": [ty], "tile_x": [tx],
-                             "px": [canvas.tolist()]})
-
-    return pixels.groupBy("tile_y", "tile_x").applyInPandas(build, G.TILE_SCHEMA)
+def points_to_pixel_counts(points: DataFrame, zoom: int, tile: int = 256,
+                           lon_col: str = "lon", lat_col: str = "lat",
+                           weight_col: str | None = None) -> DataFrame:
+    """-> (tile_y, tile_x, pxi, v): `global_pixel_counts` addressed by
+    tile."""
+    return (global_pixel_counts(points, zoom, tile, lon_col, lat_col,
+                                weight_col)
+            .select(*tile_pixel_cols(tile), "v"))
 
 
 def tiles_to_pixels(tiles: DataFrame, spec: G.GridSpec) -> DataFrame:
-    """Inverse of pixel_counts_to_tiles: dense tile rows -> the sparse
-    NONZERO global-pixel relation (gx, gy, v). Arrow-batched; output
-    is bounded by occupied pixels, not raster size."""
-    import pyarrow  # noqa: F401  (mapInPandas transport)
-
+    """Dense tile rows -> the sparse NONZERO global-pixel relation
+    (gx, gy, v), the inverse of `density_tiles`' densify. One
+    `np.flatnonzero` per Arrow batch; output is bounded by occupied
+    pixels, not raster size. A tile's row stride is its own width:
+    partial edge tiles are narrower than spec.tile."""
     t = spec.tile
 
-    def emit(it):
-        for pdf in it:
-            for _, row in pdf.iterrows():
-                ty, tx = int(row["tile_y"]), int(row["tile_x"])
-                h, w = spec.tile_shape(ty, tx)
-                a = np.asarray(row["px"], np.float64).reshape(h, w)
-                iy, ix = np.nonzero(a)
-                yield pd.DataFrame({
-                    "gx": tx * t + ix, "gy": ty * t + iy,
-                    "v": a[iy, ix]})
+    def emit(batches):
+        for b in batches:
+            ty = b.column("tile_y").to_numpy().astype(np.int64)
+            tx = b.column("tile_x").to_numpy().astype(np.int64)
+            off, vals = TB.px_values(b.column("px"))
+            hit = np.flatnonzero(vals)
+            row = np.searchsorted(off, hit, side="right") - 1
+            i = hit - off[row]
+            w = np.minimum(t, spec.width - tx * t)[row]
+            yield pa.RecordBatch.from_arrays(
+                [tx[row] * t + i % w, ty[row] * t + i // w, vals[hit]],
+                names=["gx", "gy", "v"])
 
-    return tiles.mapInPandas(emit, "gx long, gy long, v double")
+    return (tiles.select("tile_y", "tile_x", "px")
+            .mapInArrow(emit, "gx long, gy long, v double"))
 
 
 def density_tiles(points: DataFrame, zoom: int, tile: int = 256,
                   lon_col: str = "lon", lat_col: str = "lat") -> DataFrame:
-    """points -> dense density tiles on the world_3857 grid at `zoom`."""
-    spec = G.world_3857(zoom, tile)
-    return pixel_counts_to_tiles(
-        points_to_pixel_counts(points, zoom, tile, lon_col, lat_col), spec)
+    """points -> dense density tiles (tile_y, tile_x, px) on the
+    world_3857 grid at `zoom`: only tiles holding a point."""
+    return TB.densify(
+        points_to_pixel_counts(points, zoom, tile, lon_col, lat_col),
+        ["tile_y", "tile_x"], tile)

@@ -109,7 +109,9 @@ def proximity(tiles: DataFrame, spec: G.GridSpec,
         ctx, cty = b.value
         return _dist_field(key, ctx, cty, spec, max_dist, nodata)
 
-    return tiles.groupBy("tile_y", "tile_x").applyInPandas(dist_tile, G.TILE_SCHEMA)
+    # only the group keys reach Python: dist_tile reads no pixel
+    return (tiles.select("tile_y", "tile_x").groupBy("tile_y", "tile_x")
+            .applyInPandas(dist_tile, G.TILE_SCHEMA))
 
 
 def proximity_ring(tiles: DataFrame, spec: G.GridSpec,

@@ -9,7 +9,9 @@ rasters (counts stay counts). Tile addressing: parent = (tx//2, ty//2),
 child quadrant = (tx%2, ty%2) in XYZ orientation.
 
 Spark-first: one `groupBy(parent)` + `applyInPandas` per zoom level —
-a single shuffle whose key count shrinks 4x per level. The `--resume`
+a single shuffle whose key count shrinks 4x per level. (The density
+pyramid writer needs none of this for `sum`: it sums the sparse pixel
+counts in the JVM, `tilewriter.sum_pyramid`.) The `--resume`
 behavior (gdalalg_raster_tile.cpp:289 — generate only missing tiles)
 is an anti-join against the committed-tile manifest
 (gdal_spark.checkpoint), giving idempotent restart per the north rule.

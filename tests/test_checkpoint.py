@@ -108,3 +108,33 @@ def test_verify_detects_corruption(spark, tmp_path):
     extra.write.mode("append").partitionBy("bucket").parquet(path)
     audit = CP.verify_stage(spark, path, ["cell_id"])
     assert audit.filter(~F.col("ok")).count() > 0
+
+
+def test_verify_detects_one_changed_pixel(spark, tmp_path):
+    """The manifest hash covers array contents: rewriting one pixel of
+    a stored `px` array (same rows, same keys) fails that bucket's
+    audit and only that bucket's."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "stage7")
+    rows = [(ty, tx, [float(ty * 8 + tx + i) for i in range(16)])
+            for ty in range(4) for tx in range(4)]
+    tiles = spark.createDataFrame(rows, "tile_y int, tile_x int, px array<double>")
+    CP.run_stage(tiles, path, ["tile_y", "tile_x"], n_buckets=4)
+    target = sorted(glob.glob(f"{path}/bucket=*/*.parquet"))[0]
+    table = pq.read_table(target)
+    px = table.column("px").to_pylist()
+    px[0][5] += 1.0
+    table = table.set_column(table.schema.get_field_index("px"),
+                             table.schema.field("px"), [px])
+    pq.write_table(table, target)
+    # the local Hadoop FS would reject the rewrite by its stale checksum
+    os.remove(os.path.join(os.path.dirname(target),
+                           f".{os.path.basename(target)}.crc"))
+    bucket = int(target.split("bucket=")[1].split("/")[0])
+    audit = CP.verify_stage(spark, path, ["tile_y", "tile_x"])
+    assert {r["bucket"] for r in audit.filter(~F.col("ok")).collect()} == {bucket}
+    assert audit.filter(F.col("a_rows") != F.col("n_rows")).count() == 0

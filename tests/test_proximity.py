@@ -2,6 +2,8 @@
 oracle, including partial edge tiles; the scale path runs no Spark job
 before the caller's action and caches nothing."""
 
+import re
+
 import numpy as np
 from hypothesis import Phase, example, given, settings
 from hypothesis import strategies as st
@@ -85,6 +87,22 @@ def test_proximity_partial_edge_tiles(spark):
     for df in (PX.proximity(tiles, spec, max_dist=25.0),
                PX.proximity_ring(tiles, spec, max_dist=25.0)):
         np.testing.assert_array_equal(tiles_to_canvas(df, spec), want)
+
+
+def test_proximity_broadcast_ships_only_tile_keys(spark):
+    """The broadcast path's dist_tile reads only its group key, so the
+    Python node takes (tile_y, tile_x) and no `px` array crosses the
+    Arrow boundary; the output still equals the oracle."""
+    c = np.zeros((64, 64))
+    c[3, 5] = c[40, 50] = 1.0
+    spec = _spec(c, 32)
+    df = PX.proximity(_tiles(spark, c, spec), spec)
+    np.testing.assert_array_equal(tiles_to_canvas(df, spec),
+                                  PX.proximity_np(c))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    calls = re.findall(r"dist_tile\(([^)]*)\)", plan)
+    assert calls, plan
+    assert all("px" not in args for args in calls), calls
 
 
 def test_proximity_ring_is_lazy_and_leak_free(spark):

@@ -90,6 +90,31 @@ def test_density_tiles_match_direct_counts(spark, sf_dir):
     assert canvas.sum() == len(pdf)
 
 
+def test_tiles_to_pixels_partial_edge_tiles(spark):
+    """53 x 37 with tile 8: the last tile column is 5 px wide and the
+    last tile row 5 px high, so each tile's pixels decode with its own
+    width. Every nonzero pixel comes back once, NaN included (it is
+    nonzero), with its value."""
+    spec = G.GridSpec(53, 37, (0.0, 1.0, 0.0, 37.0, 0.0, -1.0), tile=8)
+    rng = np.random.default_rng(11)
+    canvas = np.where(rng.random((37, 53)) < 0.2, rng.random((37, 53)), 0.0)
+    canvas[36, 52] = np.nan
+    rows = []
+    for ty in range(spec.tiles_y):
+        for tx in range(spec.tiles_x):
+            h, w = spec.tile_shape(ty, tx)
+            rows.append((ty, tx, canvas[ty * 8:ty * 8 + h,
+                                        tx * 8:tx * 8 + w].ravel().tolist()))
+    tiles = spark.createDataFrame(rows, "tile_y int, tile_x int, px array<double>")
+    got = np.zeros_like(canvas)
+    seen = np.zeros(canvas.shape, dtype=int)
+    for r in D.tiles_to_pixels(tiles, spec).collect():
+        got[r["gy"], r["gx"]] = r["v"]
+        seen[r["gy"], r["gx"]] += 1
+    np.testing.assert_array_equal(seen, (canvas != 0).astype(int))
+    np.testing.assert_array_equal(got, canvas)
+
+
 def test_pyramid_sum_equals_coarser_density(spark, sf_dir):
     """Sum-downsampled density at z-1 == density computed directly at
     z-1 (the 2x2 pixel containment property of the mercator pyramid)."""

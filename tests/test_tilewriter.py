@@ -3,9 +3,12 @@
 import shutil
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
+from gdal_spark.raster import density as D
 from gdal_spark.raster import grid as G
+from gdal_spark.raster import pyramid as P
 from gdal_spark.raster import tilewriter as TW
 from gdal_spark.sources import pages
 from tests.test_raster_spark import tiles_to_canvas
@@ -47,7 +50,6 @@ def test_pyramid_roundtrip_matches_density(spark, sf_dir, tmp_path):
     out = str(tmp_path / "pyr3")
     pts = pages.page_points(spark, sf_dir)
     TW.write_pyramid(pts, out, base_zoom=2, min_zoom=2, tile=32)
-    from gdal_spark.raster import density as D
     spec = G.world_3857(2, 32)
     got = tiles_to_canvas(TW.read_level(spark, out, 2).drop("zoom"), spec)
     want = tiles_to_canvas(D.density_tiles(pts, 2, 32), spec)
@@ -55,9 +57,9 @@ def test_pyramid_roundtrip_matches_density(spark, sf_dir, tmp_path):
 
 
 def test_write_pyramid_releases_cached_levels(spark, sf_dir, tmp_path):
-    """write_pyramid caches each level only while the next one is
-    built: Spark's cache manager holds as many entries after the call
-    as before it, for a fresh write and for a resume alike."""
+    """No cache entry write_pyramid makes outlives the call: Spark's
+    cache manager holds as many entries after it as before, for a
+    fresh write and for a resume alike."""
     cache = spark._jsparkSession.sharedState().cacheManager()
     pts = pages.page_points(spark, sf_dir)
     before = cache.numCachedEntries()
@@ -66,3 +68,115 @@ def test_write_pyramid_releases_cached_levels(spark, sf_dir, tmp_path):
     assert cache.numCachedEntries() == before
     TW.write_pyramid(pts, out, base_zoom=3, min_zoom=1, tile=32)
     assert cache.numCachedEntries() == before
+
+
+def _edge_points(spark, sf_dir):
+    """Pages plus points the pixel math clamps: the antimeridian and
+    latitudes past web mercator's +-85.05 limit land in the grid's
+    first or last pixel row / column."""
+    edge = spark.createDataFrame(
+        [(180.0, 89.9), (180.0, -89.9), (-180.0, 89.9), (-180.0, -90.0),
+         (179.99999, 85.2), (0.0, -89.0), (180.0, 0.0), (180.0, 0.0)],
+        "lon double, lat double")
+    return (pages.page_points(spark, sf_dir).select("lon", "lat")
+            .unionByName(edge))
+
+
+def _tiles_by_key(df) -> dict:
+    return {(r["tile_y"], r["tile_x"]): list(r["px"])
+            for r in df.select("tile_y", "tile_x", "px").collect()}
+
+
+@pytest.mark.parametrize("batch_rows", [None, 7])
+def test_sum_pyramid_equals_dense_overview_chain(spark, sf_dir, tmp_path,
+                                                 batch_rows):
+    """Every level of write_pyramid z3 -> z0 is bit-identical to
+    density_tiles + overview_level(..., "sum"), edge-clamped points
+    included. With 7-row Arrow batches (the reference is built with the
+    default batch size) one tile's sparse pixels arrive in several
+    batches, so the densify's carry is exercised."""
+    pts = _edge_points(spark, sf_dir)
+    want, level = {}, D.density_tiles(pts, 3, 16)
+    for z in (3, 2, 1, 0):
+        if z != 3:
+            level = P.overview_level(level, z + 1, "sum", 16)
+        want[z] = _tiles_by_key(level)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    if batch_rows:
+        spark.conf.set(conf, str(batch_rows))
+    try:
+        out = str(tmp_path / "pyr_sum")
+        TW.write_pyramid(pts, out, base_zoom=3, min_zoom=0, tile=16)
+        for z in (3, 2, 1, 0):
+            got = TW.read_level(spark, out, z)
+            assert {r[0] for r in got.select("zoom").distinct().collect()} == {z}
+            assert _tiles_by_key(got) == want[z], z
+    finally:
+        spark.conf.set(conf, old)
+
+
+def _python_nodes(qe, jvm) -> set[tuple[int, str]]:
+    """Identities of the Python physical nodes in an executed plan,
+    through AQE stages and cached relations (a cache read by several
+    queries holds one plan instance, so it counts once)."""
+    found = set()
+
+    def visit(p):
+        cls = p.getClass()
+        name = cls.getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            return visit(p.executedPlan())
+        if name.endswith("QueryStageExec"):
+            return visit(p.plan())
+        if name == "ReusedExchangeExec":
+            return visit(p.child())
+        if cls.getPackage().getName() == "org.apache.spark.sql.execution.python":
+            found.add((jvm.System.identityHashCode(p), p.nodeName()))
+        if name == "InMemoryTableScanExec":
+            visit(p.relation().cachedPlan())
+        it = p.children().iterator()
+        while it.hasNext():
+            visit(it.next())
+
+    visit(qe.executedPlan())
+    return found
+
+
+class _Queries:
+    """py4j QueryExecutionListener: keeps every finished query."""
+
+    def __init__(self):
+        self.done = []
+
+    def onSuccess(self, func_name, qe, duration_ns):
+        self.done.append(qe)
+
+    def onFailure(self, func_name, qe, exception):
+        pass
+
+    class Java:
+        implements = ["org.apache.spark.sql.util.QueryExecutionListener"]
+
+
+def test_write_pyramid_runs_one_python_node(spark, sf_dir, tmp_path):
+    """A z5 -> z1 sum pyramid, five levels, executes exactly one Python
+    plan node (the densify MapInArrow) across all its Spark queries,
+    and no FlatMapGroupsInPandas."""
+    from pyspark.java_gateway import ensure_callback_server_started
+
+    sc = spark.sparkContext
+    ensure_callback_server_started(sc._gateway)
+    listener = _Queries()
+    manager = spark._jsparkSession.listenerManager()
+    manager.register(listener)
+    try:
+        TW.write_pyramid(pages.page_points(spark, sf_dir),
+                         str(tmp_path / "pyr_one"), base_zoom=5, min_zoom=1,
+                         tile=32)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    finally:
+        manager.unregister(listener)
+    nodes = set().union(*[_python_nodes(qe, spark._jvm)
+                          for qe in listener.done])
+    assert [name for _, name in nodes] == ["MapInArrow"], nodes

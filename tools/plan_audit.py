@@ -55,7 +55,8 @@ def main() -> None:
         interesting = [ln.strip() for ln in plan.splitlines()
                        if re.search(r"PushedFilters: \[[^]]|BroadcastHashJoin|"
                                     r"ReadSchema|AdaptiveSparkPlan|"
-                                    r"ArrowEvalPython|MapInPandas|Filter \(", ln)]
+                                    r"ArrowEvalPython|MapIn(Pandas|Arrow)|Filter \(",
+                                    ln)]
         sections.append(
             f"## {name} — {status}\n\n"
             + ("".join(f"- {n}\n" for n in notes) if notes else "")
@@ -219,6 +220,17 @@ def main() -> None:
     check("minhash banded equi-join", plan_of(mh),
           must=[r"SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin"],
           must_not=[r"CartesianProduct|BroadcastNestedLoopJoin"])
+
+    # 17. sum pyramid: every level write_pyramid writes (sparse JVM
+    #     overviews, unioned) is densified by exactly ONE Python node,
+    #     a MapInArrow; no per-level or per-tile grouped pandas stage
+    from gdal_spark.raster import tilewriter as TW
+    sp = TW.sum_pyramid(pages.page_points(spark, SF_DIR), 5, 1, 32)
+    check("write_pyramid one MapInArrow", plan_of(sp),
+          must=[r"(?m)^\(\d+\) MapInArrow"],
+          must_not=[r"(?m)^\(\d+\) MapInArrow[\s\S]*^\(\d+\) MapInArrow",
+                    r"FlatMapGroupsInPandas|MapInPandas|ArrowEvalPython|"
+                    r"BatchEvalPython"])
 
     header = (
         "# PLANS — physical-plan audit evidence\n\n"
