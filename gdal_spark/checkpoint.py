@@ -10,31 +10,36 @@ tiling or join stage resumes idempotently". The reference's analog is
 Design (all DataFrame ops, no driver data paths):
 
  - a stage's output is hash-bucketed by its key columns into
-   `n_buckets` deterministic buckets (pmod(xxhash64(keys), n));
- - each bucket's rows land in its own parquet partition directory
-   (`bucket=<i>/`), written ATOMICALLY per bucket relative to the
-   manifest: a bucket is only considered committed once its manifest
-   row exists;
- - the manifest (one parquet under `<path>/_manifest/`) carries per
-   bucket: row count, order-independent content hash (bit_xor of
-   per-row xxhash64 over all columns, hashed natively: an array column
-   by its elements, with no string form), and the key range (lineage:
-   min/max of the first key column — for cell-keyed stages this is the
-   cell range served by that bucket). Manifests written when the hash
-   went through each column's string form fail `verify_stage`; resume
-   reads only their bucket ids, so it still works on them;
- - `run_stage` with an existing manifest anti-joins the input against
-   committed buckets and processes ONLY missing buckets — a re-run
-   after a mid-write failure (or a second identical run) writes
-   nothing twice and converges to the same manifest.
+   `n_buckets` deterministic buckets (pmod(xxhash64(keys), n)); each
+   bucket's rows land in its own parquet partition directory
+   (`bucket=<i>/`);
+ - the manifest (parquet under `<path>/_manifest/`) carries per bucket:
+   row count, order-independent content hash (bit_xor of per-row
+   xxhash64 over all columns, hashed natively: an array column by its
+   elements, with no string form), and the key range (lineage: min/max
+   of the first key column — for cell-keyed stages this is the cell
+   range served by that bucket). Manifests written when the hash went
+   through each column's string form fail `verify_stage`; resume reads
+   only their bucket ids, so it still works on them;
+ - commit protocol (`run_stage`): purge bucket dirs with no manifest
+   row, write the data of the uncommitted buckets, then append their
+   manifest rows. A bucket is committed once its manifest row exists,
+   so a crash between the writes leaves an orphan dir that the next
+   run purges, never a duplicate. Each write is one pass over the
+   input (no persist, no count), so the input is computed twice;
+ - resume keeps only input rows of buckets the manifest lacks: a re-run
+   after a mid-write failure (or a second identical run) writes nothing
+   twice and converges to the same manifest;
+ - manifests are read with their declared schema: no inference job.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StructType
 
 DEFAULT_BUCKETS = 64
 
@@ -61,29 +66,19 @@ def manifest_of(bucketed: DataFrame, key_cols: list[str]) -> DataFrame:
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, jpath, jvm
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
 def _purge_orphan_buckets(spark: SparkSession, path: str,
-                          committed: set[int]) -> int:
-    """Delete any bucket=<i> data dir with no manifest row.
-
-    A crash between the data append and the manifest append leaves an
-    orphan bucket dir; because run_stage writes with mode('append'),
-    re-processing that bucket would duplicate its rows. Purging orphans
-    first makes the data write atomic relative to the manifest: a bucket
-    dir exists on disk iff it either has a manifest row or is being
-    (re)written this run. Uses the Hadoop FS API so it works on any
-    supported filesystem, and touches only the bounded bucket dirs
-    (DEFAULT_BUCKETS), never data rows.
-    """
-    fs, jpath, jvm = _hadoop_fs(spark, path)
+                          committed: set[int]) -> None:
+    """Delete any bucket=<i> data dir with no manifest row: the orphan a
+    crash between the data and the manifest append leaves, which the
+    append-mode re-write would otherwise duplicate. Hadoop FS API, so any
+    supported filesystem; touches only bucket dirs, never data rows."""
+    fs, jpath = _hadoop_fs(spark, path)
     if not fs.exists(jpath):
-        return 0
-    purged = 0
+        return
     for status in fs.listStatus(jpath):
         name = status.getPath().getName()
         if not (status.isDirectory() and name.startswith("bucket=")):
@@ -94,23 +89,21 @@ def _purge_orphan_buckets(spark: SparkSession, path: str,
             continue
         if b not in committed:
             fs.delete(status.getPath(), True)
-            purged += 1
-    return purged
 
 
-def committed_buckets(spark: SparkSession, path: str) -> DataFrame | None:
+def committed_buckets(spark: SparkSession, path: str) -> set[int]:
+    """Bucket ids with a manifest row at `path` (empty if none). The
+    manifest is read with its declared schema: no schema-inference job."""
     mpath = os.path.join(path, "_manifest")
     # same Hadoop FS existence check as _purge_orphan_buckets: the
     # manifest probe and the purge MUST see the same filesystem, or on
-    # a non-local FS the probe returns None and the purge then deletes
+    # a non-local FS the probe finds nothing and the purge then deletes
     # every previously committed bucket before re-appending
-    fs, jmpath, _ = _hadoop_fs(spark, mpath)
+    fs, jmpath = _hadoop_fs(spark, mpath)
     if not fs.exists(jmpath):
-        return None
-    try:
-        return spark.read.parquet(mpath)
-    except Exception:
-        return None
+        return set()
+    return {r.bucket for r in
+            spark.read.schema("bucket int").parquet(mpath).collect()}
 
 
 def run_stage(df: DataFrame, path: str, key_cols: list[str],
@@ -119,57 +112,53 @@ def run_stage(df: DataFrame, path: str, key_cols: list[str],
     prior partial run. Returns {'written': k, 'skipped': m} bucket
     counts. Idempotent: running twice writes nothing the second time,
     and once every bucket is committed `df` is not computed at all.
-    """
+
+    Two writes, each one pass over `df`: the data, its row count
+    observed, then (only if it had rows) the manifest aggregated straight
+    into one file, `written` observed on that aggregate. `df` is thus
+    computed twice: pass it persisted if that costs more than a second
+    read (write_pyramid passes persisted levels). Input with no row in an
+    uncommitted bucket writes no data and no manifest file; a fresh path
+    gets only the committer's `_SUCCESS` marker."""
     spark = df.sparkSession
     bucketed = _bucket(df, key_cols, n_buckets)
+    committed = committed_buckets(spark, path)
+    # crash-window repair: drop data dirs that never got a manifest row,
+    # so re-processing them cannot append duplicates
+    _purge_orphan_buckets(spark, path, committed)
+    if committed >= set(range(n_buckets)):
+        # every bucket a row can hash to is committed: nothing to compute
+        return {"written": 0, "skipped": len(committed)}
+    if committed:
+        bucketed = bucketed.filter(~F.col("bucket").isin(sorted(committed)))
 
-    prior = committed_buckets(spark, path)
-    skipped = 0
-    if prior is not None:
-        committed = {r.bucket for r in prior.select("bucket").collect()}
-        skipped = len(committed)
-        # crash-window repair: drop data dirs that never got a manifest
-        # row, so re-processing them cannot append duplicates
-        _purge_orphan_buckets(spark, path, committed)
-        if committed >= set(range(n_buckets)):
-            # every bucket a row can hash to is committed: the anti-join
-            # below would drop every row
-            return {"written": 0, "skipped": skipped}
-        done = prior.select("bucket")
-        bucketed = bucketed.join(F.broadcast(done), "bucket", "left_anti")
-    else:
-        _purge_orphan_buckets(spark, path, set())
-
-    bucketed = bucketed.persist()
-    try:
-        new_manifest = manifest_of(bucketed, key_cols).persist()
-        n_new = new_manifest.count()
-        if n_new > 0:
-            (bucketed.write.mode("append").partitionBy("bucket").parquet(path))
-            # manifest append LAST: a bucket is committed only once its
-            # manifest row exists => crash between the two writes leaves
-            # an orphan data dir that the next resume PURGES before
-            # re-processing (never silent duplication; verify_stage also
-            # recomputes hashes from data as a belt-and-braces audit).
-            (new_manifest.write.mode("append")
-             .parquet(os.path.join(path, "_manifest")))
-        return {"written": int(n_new), "skipped": int(skipped)}
-    finally:
-        bucketed.unpersist()
-        try:
-            new_manifest.unpersist()
-        except Exception:
-            pass
+    rows = Observation()
+    (bucketed.observe(rows, F.count(F.lit(1)).alias("n"))
+     .write.mode("append").partitionBy("bucket").parquet(path))
+    if rows.get["n"] == 0:
+        return {"written": 0, "skipped": len(committed)}
+    # manifest LAST (commit protocol: module docstring)
+    buckets = Observation()
+    (manifest_of(bucketed, key_cols)
+     .observe(buckets, F.count(F.lit(1)).alias("n")).coalesce(1)
+     .write.mode("append").parquet(os.path.join(path, "_manifest")))
+    return {"written": buckets.get["n"], "skipped": len(committed)}
 
 
 def verify_stage(spark: SparkSession, path: str, key_cols: list[str]) -> DataFrame:
     """Recompute per-bucket counts/hashes from the written data and
-    join against the manifest -> rows with ok flag (lineage audit)."""
+    join against the manifest -> rows with ok flag (lineage audit). The
+    manifest is read with its declared schema, the key range typed as
+    the data's first key column."""
     data = spark.read.parquet(path)
     actual = manifest_of(data, key_cols).select(
         "bucket", F.col("n_rows").alias("a_rows"),
         F.col("content_hash").alias("a_hash"))
-    man = spark.read.parquet(os.path.join(path, "_manifest"))
+    key = data.schema[key_cols[0]].dataType
+    man = (spark.read.schema(
+        StructType().add("bucket", IntegerType()).add("n_rows", LongType())
+        .add("content_hash", LongType()).add("key_lo", key).add("key_hi", key))
+        .parquet(os.path.join(path, "_manifest")))
     # coalesce to False so orphan buckets (data-only or manifest-only:
     # the full outer join leaves one side NULL) fail the audit instead
     # of slipping past filter(~col('ok')) as NULL

@@ -16,8 +16,8 @@ from .raster import checksum as CK
 from .raster import density as D
 from .raster import grid as G
 from .raster import polygonize as PZ
-from .raster import pyramid as P
 from .raster import rasterize as R
+from .raster import tilewriter as TW
 from .raster import warp as W
 from .sources import admin, pages
 
@@ -71,10 +71,10 @@ def pyramid_checksum(spark, sf_dir):
     fraction (lon+180)/360 is rounded ONCE, then scaled by exact
     powers of two at every zoom)."""
     pts = pages.page_points(spark, sf_dir)
-    base = D.density_tiles(pts, ZOOM, TILE)
-    levels = P.build_pyramid(base, ZOOM, 3, kernel="sum", tile=TILE)
+    z3 = (TW.sum_pyramid(pts, ZOOM, 3, TILE).filter(F.col("zoom") == 3)
+          .select("tile_y", "tile_x", "px"))
     spec = G.world_3857(3, TILE)
-    return (R.tiles_checksum(levels[3], spec)
+    return (R.tiles_checksum(z3, spec)
             .filter(F.col("n_nonzero") > 0)
             .orderBy("tile_y", "tile_x"))
 

@@ -13,7 +13,7 @@ a single shuffle whose key count shrinks 4x per level. (The density
 pyramid writer needs none of this for `sum`: it sums the sparse pixel
 counts in the JVM, `tilewriter.sum_pyramid`.) The `--resume`
 behavior (gdalalg_raster_tile.cpp:289 — generate only missing tiles)
-is an anti-join against the committed-tile manifest
+is a filter against the committed buckets of the manifest
 (gdal_spark.checkpoint), giving idempotent restart per the north rule.
 """
 

@@ -10,7 +10,7 @@ This is the engine's `gdal raster tile` (apps/gdalalg_raster_tile.cpp):
    (`sum_pyramid`); other kernels reduce dense tiles level by level
    (`pyramid.overview_level`);
  - `--resume` (:289): only missing tiles are generated — restated as
-   the checkpoint module's manifest anti-join, so a partially-written
+   the checkpoint module's committed-bucket filter, so a partially-written
    level resumes idempotently (north-rule lineage requirement);
  - tile payloads are stored as parquet rows (zoom, tile_y, tile_x,
    px) bucketed by tile key — the cloud-scale form — AND can emit the
@@ -85,8 +85,9 @@ def write_pyramid(points: DataFrame, out_dir: str, base_zoom: int,
     writes each level as a filter of that cache. Other kernels need
     the dense children: each level is `overview_level` of the one
     above, cached only until the level built from it has been through
-    run_stage. Either way no level is computed twice and no cache
-    entry outlives the call."""
+    run_stage. Either way no level is computed twice, though run_stage
+    reads each one twice (data, then manifest), and no cache entry
+    outlives the call."""
     def stage(tiles: DataFrame, z: int) -> dict:
         return CP.run_stage(tiles, os.path.join(out_dir, f"z{z}"),
                             ["tile_y", "tile_x"], n_buckets=n_buckets)

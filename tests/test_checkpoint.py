@@ -1,5 +1,7 @@
 """Lineage-checkpoint contract: idempotent resume, manifest audit."""
 
+import os
+
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -34,7 +36,7 @@ def test_stage_rerun_is_noop(spark, tmp_path):
     assert out2 == {"written": 0, "skipped": 8}
     assert spark.read.parquet(path).count() == 1000  # nothing duplicated
     # every bucket committed: the input is not even evaluated (the UDF
-    # is nondeterministic so Catalyst cannot push the anti-join below it)
+    # is nondeterministic so Catalyst cannot push the bucket filter below it)
     fail = F.udf(lambda v: v // 0, "long").asNondeterministic()
     boom = _df(spark).withColumn("v", fail("v"))
     out3 = CP.run_stage(boom, path, ["cell_id"], n_buckets=8)
@@ -138,3 +140,62 @@ def test_verify_detects_one_changed_pixel(spark, tmp_path):
     audit = CP.verify_stage(spark, path, ["tile_y", "tile_x"])
     assert {r["bucket"] for r in audit.filter(~F.col("ok")).collect()} == {bucket}
     assert audit.filter(F.col("a_rows") != F.col("n_rows")).count() == 0
+
+
+def _files(path) -> list[str]:
+    """Every file under `path`, relative, without Hadoop checksums."""
+    return sorted(os.path.relpath(os.path.join(d, f), path)
+                  for d, _, names in os.walk(path) for f in names
+                  if not f.endswith(".crc"))
+
+
+def test_empty_input_commits_nothing(spark, tmp_path):
+    """Empty input on a fresh path: no data and no manifest file (only
+    the committer's _SUCCESS marker), and a re-run does the same."""
+    path = str(tmp_path / "stage_empty")
+    for _ in range(2):
+        out = CP.run_stage(_df(spark).filter(F.col("v") < 0), path,
+                           ["cell_id"], n_buckets=8)
+        assert out == {"written": 0, "skipped": 0}
+        assert _files(path) == ["_SUCCESS"]
+
+
+def test_resume_into_committed_buckets_writes_nothing(spark, tmp_path):
+    """A partial resume whose input hashes only into committed buckets
+    writes no data file and no manifest file."""
+    path = str(tmp_path / "stage_committed")
+    bucketed = CP._bucket(_df(spark), ["cell_id"], 8)
+    part = bucketed.filter(F.col("bucket") < 3)
+    part.write.partitionBy("bucket").parquet(path)
+    CP.manifest_of(part, ["cell_id"]).write.parquet(path + "/_manifest")
+    before = _files(path)
+
+    out = CP.run_stage(part.drop("bucket"), path, ["cell_id"], n_buckets=8)
+    assert out == {"written": 0, "skipped": 3}
+    assert _files(path) == before
+    assert spark.read.parquet(path).count() == part.count()
+
+
+def test_verify_string_keyed_stage(spark, tmp_path):
+    """The manifest's key range is read with the data's key type."""
+    path = str(tmp_path / "stage_str")
+    df = _df(spark).withColumn("name", F.format_string("k%05d", "cell_id"))
+    CP.run_stage(df, path, ["name"], n_buckets=4)
+    audit = CP.verify_stage(spark, path, ["name"])
+    assert dict(audit.dtypes)["key_lo"] == "string"
+    rows = audit.collect()
+    assert len(rows) == 4 and all(r["ok"] for r in rows)
+    assert min(r["key_lo"] for r in rows) == "k00000"
+    assert max(r["key_hi"] for r in rows) == "k00999"
+
+
+def test_manifest_equals_manifest_of_at_64_buckets(spark, tmp_path):
+    """The committed manifest of a default-size (64-bucket) stage is
+    exactly manifest_of over its bucketed input."""
+    path = str(tmp_path / "stage64")
+    df = _df(spark, n=5000)
+    out = CP.run_stage(df, path, ["cell_id"])
+    assert out == {"written": 64, "skipped": 0}
+    got = spark.read.parquet(path + "/_manifest").collect()
+    want = CP.manifest_of(CP._bucket(df, ["cell_id"], 64), ["cell_id"]).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))

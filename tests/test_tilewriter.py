@@ -180,3 +180,42 @@ def test_write_pyramid_runs_one_python_node(spark, sf_dir, tmp_path):
     nodes = set().union(*[_python_nodes(qe, spark._jvm)
                           for qe in listener.done])
     assert [name for _, name in nodes] == ["MapInArrow"], nodes
+
+
+def _jobs_in(sc, group: str, fn):
+    """-> (fn(), number of Spark jobs fn ran), counted by job group."""
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pyramid_commit_job_counts(spark, sf_dir, tmp_path):
+    """Spark jobs of a z3 -> z1 pyramid: the fresh write, a resume over
+    the fully committed store and the audit. A full resume reads one
+    manifest per level (one job each, no schema-inference job), and
+    neither call leaves a cache entry behind."""
+    sc = spark.sparkContext
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    pts = pages.page_points(spark, sf_dir)
+    out = str(tmp_path / "pyr_jobs")
+
+    def write():
+        return TW.write_pyramid(pts, out, base_zoom=3, min_zoom=1, tile=32,
+                                n_buckets=2)
+
+    cached = cache.numCachedEntries()
+    stats, n_write = _jobs_in(sc, "pyr_jobs_write", write)
+    assert all(s == {"written": 2, "skipped": 0} for s in stats.values())
+    assert cache.numCachedEntries() == cached
+    stats, n_resume = _jobs_in(sc, "pyr_jobs_resume", write)
+    assert all(s == {"written": 0, "skipped": 2} for s in stats.values())
+    assert cache.numCachedEntries() == cached
+    audit, n_verify = _jobs_in(
+        sc, "pyr_jobs_verify", lambda: TW.verify_pyramid(spark, out, 3, 1).collect())
+    assert len(audit) == 6 and all(r["ok"] for r in audit)
+    assert n_resume == len(stats)
+    assert (n_write, n_verify) == (14, 10)
